@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -49,10 +51,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # No Iceberg runtime jar is resolvable offline in this sandbox, so tables
 # are parquet directories in an Iceberg-like layout: data files under the
 # table path (optionally hive-partitioned) plus a `_manifest.json` recording
-# schema, partition spec, snapshot id, and row count. On a real cluster the
-# writer below is the ONLY code to swap for `df.writeTo(name).using
-# ("iceberg")` — readers go through load_table/snapshot metadata the same
-# way.
+# schema, partition spec, snapshot id, and row count. On a real cluster
+# write_table/read_table are the ONLY code to swap for `df.writeTo(name)
+# .using("iceberg")` / `spark.table(name)`.
 
 
 def write_table(
@@ -62,26 +63,43 @@ def write_table(
     snapshot_id: str | None = None,
     mode: str = "overwrite",
 ) -> dict:
-    """Write parquet + manifest.json; returns the manifest dict."""
+    """Write parquet + `_manifest.json`; returns the manifest dict.
+
+    `row_count` is the number of rows this write produced, taken from an
+    Observation attached to the write job itself (no read-back count).
+    The schema is read back once, so the manifest records what a reader
+    sees: partition columns last, with their inferred types.
+    """
     import hashlib
     import json
 
-    writer = df.write.mode(mode)
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    back = df.sparkSession.read.parquet(path)
+    schema = df.sparkSession.read.parquet(path).schema
     manifest = {
         "format_version": "parquet-manifest-1",
-        "schema": back.schema.jsonValue(),
+        "schema": schema.jsonValue(),
         "partition_spec": partition_by or [],
         "snapshot_id": snapshot_id
-        or hashlib.sha256(back.schema.simpleString().encode()).hexdigest()[:16],
-        "row_count": back.count(),
+        or hashlib.sha256(schema.simpleString().encode()).hexdigest()[:16],
+        "row_count": obs.get["rows"],
     }
     with open(os.path.join(path, "_manifest.json"), "w") as fh:
         json.dump(manifest, fh)
     return manifest
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    """Read a table written by write_table with its manifest's schema, so
+    no schema-inference job runs; tables without a manifest are inferred."""
+    manifest = read_manifest(path)
+    reader = spark.read
+    if manifest is not None:
+        reader = reader.schema(StructType.fromJson(manifest["schema"]))
+    return reader.parquet(path)
 
 
 def read_manifest(path: str) -> dict | None:

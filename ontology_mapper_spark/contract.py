@@ -1181,7 +1181,7 @@ def q36(spark, sf):
     """C6 connected components (iterative hash-to-min) on a chain graph
     whose ground-truth components have a closed form — validates the loop,
     convergence, and determinism of the canonicalizer."""
-    from .pipeline.canonicalize import connected_components
+    from .pipeline.canonicalize import LOCAL_CC_THRESHOLD, connected_components
 
     p = _t(spark, sf, "part").select("p_partkey")
     a = p.alias("a")
@@ -1201,7 +1201,7 @@ def q36(spark, sf):
     # size-gated local fast path (identical labels, no lineage-cut floor);
     # graphs past the gate fall through to the distributed loop, which the
     # log-diameter property tests pin directly
-    comp = connected_components(edges_s, local_threshold=250_000)
+    comp = connected_components(edges_s, local_threshold=LOCAL_CC_THRESHOLD)
     return comp.select(
         F.col("node").cast("bigint").alias("node"),
         F.col("component").cast("bigint").alias("component"),
@@ -24074,14 +24074,14 @@ def qd45(spark, sf):
                               * (round(ln(CAST(c.ctr AS DOUBLE) * tot.nho
                                           / (CAST(c.cho AS DOUBLE)
                                              * tot.ntr)) * 1000000))
-                              / 1000000000000) AS BIGINT) END
-                   AS psi_cell_pico_scaled
+                              / 1000000) AS BIGINT) END
+                   AS psi_cell_micro
           FROM cells c CROSS JOIN tot)
     SELECT lang, ctr AS n_train, cho AS n_holdout,
            share_train_micro, share_holdout_micro,
            abs(share_train_micro - share_holdout_micro)
              AS share_gap_micro,
-           psi_cell_pico_scaled AS psi_cell_micro
+           psi_cell_micro
     FROM z
     """,
 )
@@ -24090,7 +24090,8 @@ def qd46(spark, sf):
     split: per lang, both shares, the absolute share gap, and the PSI
     cell contribution — 'did the 80/20 split preserve the language
     mix', the per-split companion of qa39's balance audit and qb69's
-    temporal PSI.  PSI cell = (p−q)·ln(p/q): the ln of the EXACT
+    temporal PSI.  PSI cell = (p−q)·ln(p/q) in micro units (×1e6,
+    qb69's PSI scale): the ln of the EXACT
     integer odds ratio is micro-rounded once per cell (q66/qb69 ln
     idiom), shares are micro ints, one mirrored integer product per
     cell — engine-exact by construction.  Split thresholds are the
@@ -24131,7 +24132,7 @@ def qd46(spark, sf):
     )
     psi_cell = F.when(
         (F.col("ctr") > 0) & (F.col("cho") > 0),
-        F.round((sh_tr - sh_ho) * ln_odds / 1_000_000_000_000).cast("long"),
+        F.round((sh_tr - sh_ho) * ln_odds / 1_000_000).cast("long"),
     )
     return j.select(
         "lang",

@@ -465,7 +465,7 @@ def dedup_clusters(
     returned — singletons are trivially their own representative.
     Candidate-pair graphs are usually tiny relative to the corpus (LSH
     already pruned them), so a size-gated driver-local union-find handles
-    graphs up to `local_threshold` edges — identical labels, none of the
+    graphs up to LOCAL_CC_THRESHOLD edges — identical labels, none of the
     per-iteration lineage-cut fixed cost; bigger graphs fall through to
     the distributed loop automatically.
 
@@ -474,16 +474,13 @@ def dedup_clusters(
     ids (ADVICE r2). Negative ids are not supported (zero-padding breaks
     their ordering).
     """
-    from ..pipeline.canonicalize import connected_components
+    from ..pipeline.canonicalize import LOCAL_CC_THRESHOLD, connected_components
 
     edges = pairs.select(
         F.lpad(F.col(id_a).cast("string"), pad, "0").alias("src_iri"),
         F.lpad(F.col(id_b).cast("string"), pad, "0").alias("dst_iri"),
     )
-    # 250k edges ≈ 250k × ~50B Rows ≈ 12MB driver heap — comfortably safe
-    # on a small driver while still covering every realistic LSH-pruned
-    # candidate graph at test scale (VERDICT r2 item 7; was 1M).
-    comp = connected_components(edges, local_threshold=250_000)
+    comp = connected_components(edges, local_threshold=LOCAL_CC_THRESHOLD)
     return comp.select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("component").cast("bigint").alias("cluster_rep"),

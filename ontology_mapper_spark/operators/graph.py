@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.canonicalize import LOCAL_CC_THRESHOLD
+
 
 def _pin(df: DataFrame) -> DataFrame:
     """Persist a derived edge/adjacency table that the operator reuses
@@ -448,7 +450,7 @@ def transitive_closure(
     child_col: str = "child",
     parent_col: str = "parent",
     max_depth: int = 64,
-    local_threshold: int = 250_000,
+    local_threshold: int = LOCAL_CC_THRESHOLD,
 ) -> DataFrame:
     """All (node, ancestor, depth) pairs of a DAG by iterative doubling —
     the rdfs:subClassOf / skos:broader closure a KG materializes so
@@ -1204,7 +1206,9 @@ def percolation_sweep(
     outs = []
     for t in thresholds:
         et = e0.where(F.col("_w") >= int(t))
-        comp = connected_components(et, "_s", "_d", local_threshold=250_000)
+        comp = connected_components(
+            et, "_s", "_d", local_threshold=LOCAL_CC_THRESHOLD
+        )
         sizes = comp.groupBy("component").agg(
             F.count("*").cast("long").alias("_sz")
         )

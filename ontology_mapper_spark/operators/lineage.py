@@ -19,7 +19,9 @@ checkpoint dir to DFS and the same code path survives executor loss.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -30,18 +32,17 @@ def parquet_cutter(
     spark: SparkSession, prefix: str = "omx-cut-"
 ) -> Callable[[DataFrame], DataFrame]:
     """Returns cut(df) -> df': writes df to a fresh parquet dir under
-    the session checkpoint dir (or a mkdtemp) and reads it back.
+    the session checkpoint dir and reads it back.
 
-    Local-mode default prefers tmpfs (/dev/shm) — the cut files are
-    small but latency-critical per round, and measured variance tracked
-    disk state (VERDICT r4 item 3); OMX_CC_CUT_DIR overrides for A/B,
-    and a configured checkpoint dir (DFS on a cluster) always wins."""
-    _base = os.environ.get("OMX_CC_CUT_DIR") or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    base = spark.sparkContext.getCheckpointDir() or tempfile.mkdtemp(
-        prefix=prefix, dir=_base
-    )
+    A configured checkpoint dir (DFS on a cluster) always wins.
+    Otherwise each cutter gets its own mkdtemp under tempfile's
+    directory (OMX_CC_CUT_DIR overrides the parent), removed at
+    interpreter exit — the frames a cutter returns are lazy scans of
+    its files, so they must outlive the call that made them."""
+    base = spark.sparkContext.getCheckpointDir()
+    if not base:
+        base = tempfile.mkdtemp(prefix=prefix, dir=os.environ.get("OMX_CC_CUT_DIR"))
+        atexit.register(shutil.rmtree, base, True)
     seq = [0]
 
     def cut(df: DataFrame) -> DataFrame:

@@ -8047,6 +8047,11 @@ def aa_uniformity_check(
     logging is broken before any real experiment can be trusted.
     Completes qb54's 2-arm SRM check with a k-arm rate uniformity test.
 
+    Input contract: ONE ROW PER UNIT (``unit_col`` unique, e.g. qd38's
+    per-user frame). The operator hashes and counts input rows as they
+    come; raw event rows would weight each bucket by event volume, not
+    by units. Aggregate to one row per unit first.
+
     Exactness: per-cell deviation d_i = x_i·N − n_i·X is exact int64;
     the cell contribution d²/(n_i·X·(N−X)) is ONE mirrored double
     chain micro-rounded per cell (qc04 discipline), then integer-

@@ -5954,9 +5954,11 @@ def watermark_lateness(
     sweep-table idiom), so coverage for ALL delays comes from ONE scan
     + one broadcast cross join — no per-delay jobs.
 
-    Output per delay: delay_s, n_rows, n_late (lateness > delay),
-    late_share_micro, max_lateness_s, p50_lateness witness is left to
-    qd01's gap machinery (this op answers the drop-rate question).
+    Output, one row per candidate delay: delay_s, n_rows, n_late (rows
+    whose lateness exceeds delay_s), late_share_micro and max_lateness_s.
+
+    This op answers only the drop-rate question; a median-lateness
+    witness is left to qd01's gap machinery.
     """
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     w = (

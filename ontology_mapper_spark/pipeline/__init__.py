@@ -2,7 +2,7 @@ from .mention_detect import AhoCorasick, build_dictionary, detect_mentions
 from .link_score import score_candidates, link_mentions
 from .comention import comention_edges
 from .canonicalize import connected_components, canonical_mapping
-from .materialize import extract_triples, materialize_graph
+from .materialize import extract_triples
 
 __all__ = [
     "AhoCorasick",
@@ -14,5 +14,4 @@ __all__ = [
     "connected_components",
     "canonical_mapping",
     "extract_triples",
-    "materialize_graph",
 ]

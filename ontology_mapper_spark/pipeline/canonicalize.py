@@ -29,6 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Edge count up to which callers take connected_components' driver-local
+# union-find instead of the distributed loop (its `local_threshold`).
+# 250k edges ≈ 250k × ~50B Rows ≈ 12MB driver heap — safe on a small
+# driver while covering every realistic LSH-pruned candidate graph and
+# dictionary-scale xref graph (VERDICT r2 item 7; was 1M).
+LOCAL_CC_THRESHOLD = 250_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -134,43 +141,15 @@ def connected_components(
     )
 
     # Lineage MUST be cut every iteration: each round's plan embeds the
-    # previous round's twice (union + join), so without checkpointing the
+    # previous round's twice (union + join), so without a cut the
     # optimizer's tree grows exponentially and the driver OOMs long before
-    # the data does. localCheckpoint materializes to executor storage (no
-    # checkpoint dir needed); a configured reliable checkpoint dir is
-    # preferred on a real cluster (survives executor loss).
-    # The cut is a parquet write + read-back into the checkpoint dir —
-    # semantically a reliable checkpoint (materialized, lineage gone) but
-    # immune to a Spark 4.1 bug where both checkpoint() and
-    # localCheckpoint() die with `NoSuchElementException: key not found:
-    # <attr>` when re-checkpointing plans that reference earlier
-    # checkpoint generations across iterations. A fresh parquet scan has
-    # brand-new attributes every round, so nothing can go stale. On a
-    # cluster, point the checkpoint dir at DFS — same code path.
-    import os as _os
-    import tempfile
+    # the data does. The cut is a parquet write + read-back
+    # (operators/lineage.py): a reliable checkpoint, immune to the Spark
+    # 4.1 `NoSuchElementException: key not found: <attr>` that both
+    # checkpoint() and localCheckpoint() hit across loop iterations.
+    from ..operators.lineage import parquet_cutter
 
-    # Local-mode default: put the cut files on tmpfs (/dev/shm) when
-    # present — the cuts are small (labels + edges) but latency-critical
-    # (3 per iteration), and measured e2e variance tracked disk state
-    # (12-32s band across passes, VERDICT r4 item 3). A configured
-    # checkpoint dir (DFS on a real cluster) always wins; OMX_CC_CUT_DIR
-    # overrides for A/B.
-    _base = _os.environ.get("OMX_CC_CUT_DIR") or (
-        "/dev/shm" if _os.path.isdir("/dev/shm") else None
-    )
-    ckpt_dir = spark.sparkContext.getCheckpointDir() or tempfile.mkdtemp(
-        prefix="omx-cc-ckpt-", dir=_base
-    )
-    cut_seq = [0]
-
-    def cut(df: DataFrame) -> DataFrame:
-        import os
-
-        path = os.path.join(ckpt_dir, f"cc-{cut_seq[0]}")
-        cut_seq[0] += 1
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+    cut = parquet_cutter(spark, prefix="omx-cc-ckpt-")
 
     # root the loop at a checkpoint (materializes sym once; replaces the
     # persist() every iteration reused anyway)
@@ -274,7 +253,7 @@ def connected_components(
 
 
 def canonical_mapping(
-    terms_df: DataFrame, xrefs: DataFrame, local_threshold: int = 250_000
+    terms_df: DataFrame, xrefs: DataFrame, local_threshold: int = LOCAL_CC_THRESHOLD
 ) -> DataFrame:
     """(class_iri, canonical_iri) for every IRI in the dictionary.
 

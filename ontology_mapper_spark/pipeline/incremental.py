@@ -9,9 +9,9 @@ those buckets:
    text) per bucket (order-independent, distributed, one map-side agg);
 2. compare against the fingerprints recorded at last run;
 3. re-run detection on changed buckets only and overwrite exactly those
-   partitions (`partitionOverwriteMode=dynamic` — untouched bucket
-   directories stay as-is, so the write cost is proportional to the
-   delta, not the corpus).
+   partitions (overwrite_buckets — untouched bucket directories stay
+   as-is, so the write cost is proportional to the delta, not the
+   corpus).
 
 This composes with stage fingerprints: the stage marker stores the
 per-bucket map instead of one hash.
@@ -21,11 +21,41 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_MARKER = "_BUCKET_FINGERPRINTS.json"
+
+
+def overwrite_buckets(df: DataFrame | None, path: str, drop: list[int]) -> int:
+    """Delete the `bucket=<b>` directories of the table at `path` for every
+    b in `drop`, then write `df` (partitioned by `bucket`) over the
+    buckets it holds; returns the rows written. Buckets that are in
+    neither stay as they are: per-write dynamic partition overwrite, so
+    the cost is the delta's, not the table's.
+
+    Dynamic overwrite replaces only partitions PRESENT in `df`, so a
+    changed bucket whose recomputation is empty would keep its stale
+    directory: callers pass every changed and removed bucket in `drop`.
+    The directories go before the lazy write runs, so `df` must not read
+    from `path`. `df=None` only drops.
+    """
+    os.makedirs(path, exist_ok=True)
+    for b in drop:
+        shutil.rmtree(os.path.join(path, f"bucket={b}"), ignore_errors=True)
+    if df is None:
+        return 0
+    obs = Observation()
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
+    return obs.get["rows"]
 
 
 def bucket_fingerprints(transcripts: DataFrame, buckets: int = 32) -> dict[str, int]:
@@ -68,8 +98,8 @@ def incremental_detect(
     """Detect mentions for changed buckets only; returns
     {'changed_buckets': [...], 'n_buckets': N, 'rows_written': int}.
 
-    Output layout: parquet partitioned by `bucket`; only changed bucket
-    partitions are overwritten (dynamic partition overwrite).
+    Output layout: parquet partitioned by `bucket`; only changed and
+    removed bucket partitions are rewritten (overwrite_buckets).
     """
     from .mention_detect import detect_mentions
 
@@ -90,39 +120,16 @@ def incremental_detect(
     if not changed and not removed:
         return result
 
-    delta = transcripts.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets))
-    ).where(F.col("bucket").isin(changed))
-    mentions = detect_mentions(
-        spark, delta.select("conv_id", "turn_idx", "text"), patterns
-    ).withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets)))
-
-    # Dynamic partition overwrite only replaces partitions PRESENT in the
-    # new write. A changed bucket whose recomputation yields zero rows
-    # would otherwise keep its stale directory forever — so drop every
-    # changed/removed bucket dir up front; the write then restores exactly
-    # the non-empty ones.
-    import shutil
-
-    for b in changed + removed:
-        shutil.rmtree(os.path.join(out_path, f"bucket={b}"), ignore_errors=True)
-
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        mentions.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
+    mentions = None
+    if changed:
+        delta = transcripts.withColumn(
+            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets))
+        ).where(F.col("bucket").isin(changed))
+        mentions = detect_mentions(
+            spark, delta.select("conv_id", "turn_idx", "text"), patterns
+        ).withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets)))
+    result["rows_written"] = overwrite_buckets(mentions, out_path, changed + removed)
     _save_marker(out_path, current)
-    # an all-buckets-empty write leaves no parquet files to infer a schema
-    # from — only count when at least one bucket directory exists
-    has_data = any(d.startswith("bucket=") for d in os.listdir(out_path))
-    result["rows_written"] = (
-        spark.read.parquet(out_path).where(F.col("bucket").isin(changed)).count()
-        if changed and has_data
-        else 0
-    )
     return result
 
 
@@ -153,7 +160,7 @@ def incremental_link(
     invalidates every bucket).
 
     Same delta-proportional pattern as incremental_detect: per-bucket
-    fingerprints gate work; dynamic partition overwrite rewrites only the
+    fingerprints gate work; overwrite_buckets rewrites only the
     recomputed bucket directories. The link itself stays the broadcast
     decision-table join (zero shuffle). The mentions' own `bucket` column
     is preserved verbatim — never recomputed — so partition alignment
@@ -189,27 +196,12 @@ def incremental_link(
     if not changed and not removed:
         return result
 
-    # Same stale-partition guard as incremental_detect: a changed bucket
-    # that links to zero rows must lose its old directory.
-    import shutil
-
-    os.makedirs(out_path, exist_ok=True)
-    for b in changed + removed:
-        shutil.rmtree(os.path.join(out_path, f"bucket={b}"), ignore_errors=True)
-
+    links = None
     if changed:
         ranked = F.broadcast(rank_dictionary(spark, terms, idf=None))
         links = mentions.where(F.col("bucket").isin(changed)).join(
             ranked, "pattern", "inner"
         )
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            links.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
+    overwrite_buckets(links, out_path, changed + removed)
     _save_marker(out_path, {**current, "__dict_version__": version_fp})
     return result

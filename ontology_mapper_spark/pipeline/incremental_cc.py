@@ -15,7 +15,7 @@ delta batch costs:
    — thousands of rows even when 10^12 labels exist);
 3. broadcast the old→new component remap back over the label table and
    rewrite ONLY the buckets containing a remapped row or a brand-new node
-   (dynamic partition overwrite, same pattern as incremental detect/link).
+   (a staged bucket swap: the rewrite reads the buckets it replaces).
 
 Result is bit-identical to a full recompute (the min-id argument; asserted
 in tests), at delta-proportional cost.
@@ -29,7 +29,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .canonicalize import connected_components
+from .canonicalize import LOCAL_CC_THRESHOLD, connected_components
+from .incremental import _load_marker, _save_marker, overwrite_buckets
 
 
 def _bucket(col, buckets: int):
@@ -58,8 +59,6 @@ def write_component_labels(
     """(node, component) → parquet partitioned by node-hash bucket, plus a
     per-bucket fingerprint marker so incremental_components can detect a
     mid-swap crash (ADVICE r2)."""
-    from .incremental import _save_marker
-
     labels.withColumn("bucket", _bucket(F.col("node"), buckets)).write.mode(
         "overwrite"
     ).partitionBy("bucket").parquet(out_path)
@@ -92,8 +91,6 @@ def incremental_components(
     recompute). Tables written before markers existed (no marker file)
     skip verification and adopt a marker on their first successful batch.
     """
-    from .incremental import _load_marker, _save_marker
-
     labels = spark.read.parquet(labels_path)
     marker = _load_marker(labels_path)
     if marker:
@@ -135,7 +132,9 @@ def incremental_components(
             F.coalesce("cv", F.col("v")).alias("dst_iri"),
         )
     )
-    small_rows = connected_components(contracted).collect()
+    small_rows = connected_components(
+        contracted, local_threshold=LOCAL_CC_THRESHOLD
+    ).collect()
     remap_rows = [
         (r["node"], r["component"])
         for r in small_rows
@@ -245,7 +244,6 @@ def incremental_materialize(
     cannot be kept bucket-local; the periodic `compact_triples` pass
     restores them — the standard delta-ingest + compaction split).
     """
-    from .incremental import _load_marker, _save_marker
     from .materialize import extract_triples
 
     links = spark.read.parquet(links_path)
@@ -257,26 +255,13 @@ def incremental_materialize(
     if not changed and not removed:
         return result
 
-    os.makedirs(out_path, exist_ok=True)
-    for b in changed + removed:
-        shutil.rmtree(os.path.join(out_path, f"bucket={b}"), ignore_errors=True)
-    if changed:
-        delta_triples = None
-        for b in changed:
-            bt = extract_triples(
-                links.where(F.col("bucket") == b).drop("bucket"), run_ts=run_ts
-            ).withColumn("bucket", F.lit(b).cast("int"))
-            delta_triples = (
-                bt if delta_triples is None else delta_triples.unionByName(bt)
-            )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            delta_triples.write.mode("overwrite").partitionBy("bucket").parquet(
-                out_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    delta_triples = None
+    for b in changed:
+        bt = extract_triples(
+            links.where(F.col("bucket") == b).drop("bucket"), run_ts=run_ts
+        ).withColumn("bucket", F.lit(b).cast("int"))
+        delta_triples = bt if delta_triples is None else delta_triples.unionByName(bt)
+    overwrite_buckets(delta_triples, out_path, changed + removed)
     _save_marker(out_path, fps)
     return result
 
@@ -310,8 +295,6 @@ def incremental_edges(
     per-(a, b) sum crosses buckets, which `compact_edges` performs at read
     (sum is algebraic, so bucket-partial + compact == full recompute).
     """
-    from .incremental import _load_marker, _save_marker
-
     links = spark.read.parquet(links_path)
     fps = _links_bucket_fps(links)
     marker = _load_marker(out_path) if os.path.exists(out_path) else {}
@@ -321,9 +304,7 @@ def incremental_edges(
     if not changed and not removed:
         return result
 
-    os.makedirs(out_path, exist_ok=True)
-    for b in changed + removed:
-        shutil.rmtree(os.path.join(out_path, f"bucket={b}"), ignore_errors=True)
+    partial = None
     if changed:
         ments = (
             links.where(F.col("bucket").isin(changed))
@@ -350,12 +331,7 @@ def incremental_edges(
             )
             .agg(F.count("*").alias("n_comentions"))
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            partial.write.mode("overwrite").partitionBy("bucket").parquet(out_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_buckets(partial, out_path, changed + removed)
     _save_marker(out_path, fps)
     return result
 

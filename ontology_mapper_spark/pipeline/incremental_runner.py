@@ -49,7 +49,7 @@ def run_incremental_batch(
     (fingerprints find what changed), `xref_delta` holds only NEW identity
     edges (None/empty when the snapshot didn't change). Returns per-stage
     delta summaries."""
-    from .canonicalize import connected_components
+    from .canonicalize import LOCAL_CC_THRESHOLD, connected_components
     from .mention_detect import build_dictionary
 
     os.makedirs(out_dir, exist_ok=True)
@@ -74,7 +74,9 @@ def run_incremental_batch(
             )
         ):
             # bootstrap: first batch runs the full CC and seeds the table
-            labels = connected_components(xref_delta)
+            labels = connected_components(
+                xref_delta, local_threshold=LOCAL_CC_THRESHOLD
+            )
             write_component_labels(labels, c_path, buckets=buckets)
             summary["canonicalize"] = {
                 "bootstrap": True,

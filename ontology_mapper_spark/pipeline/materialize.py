@@ -1,4 +1,4 @@
-"""Stage 4 — graph materialization: triples / nodes / edges (+ metrics).
+"""Stage 4 — graph materialization: links → triples.
 
 Triple vocabulary reproduces /root/reference/core/generator.py:243-295 per
 selected (concept, alignment):
@@ -27,8 +27,6 @@ shuffle.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -111,67 +109,3 @@ def extract_triples(links: DataFrame, run_ts: str | None = None) -> DataFrame:
         out = out.unionByName(prov)
     return out
 
-
-def materialize_graph(
-    links: DataFrame,
-    comentions: DataFrame,
-    canonical: DataFrame,
-    out_dir: str,
-    run_ts: str | None = None,
-) -> dict[str, str]:
-    """Write triples/nodes/edges (+_metrics) as partitioned parquet.
-
-    Layout (Iceberg-like; SURVEY.md §7.1 step 7 parquet fallback):
-      triples/  partitioned by pred_group (mapping vs metadata) — pred has
-                ~8 distinct values; partitioning by it prunes the dominant
-                access pattern (mapping-only scans) for free
-      nodes/    canonical entities with degree stats
-      edges/    co-mention edges
-      _metrics/ per-partition lineage rows (north_rule)
-    """
-    triples = extract_triples(links, run_ts=run_ts)
-    canon_links = links.join(F.broadcast(canonical), "class_iri", "left").withColumn(
-        "entity_id", F.coalesce("canonical_iri", "class_iri")
-    )
-
-    nodes = (
-        canon_links.groupBy("entity_id")
-        .agg(
-            F.count("*").alias("n_mentions"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-            F.min("label").alias("any_label"),
-        )
-    )
-
-    paths = {}
-    for name, df, parts in (
-        ("triples", triples.withColumn(
-            "pred_group",
-            F.when(F.col("pred").startswith("skos:") & F.col("pred").endswith("Match"), "mapping")
-            .otherwise("metadata"),
-        ), ["pred_group"]),
-        ("nodes", nodes, None),
-        ("edges", comentions, None),
-    ):
-        path = os.path.join(out_dir, name)
-        writer = df.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(path)
-        paths[name] = path
-
-    # per-partition lineage + metrics rows (north_rule)
-    metrics = (
-        links.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count("*").alias("n_links"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-            F.approx_count_distinct("class_iri").alias("n_classes"),
-        )
-        .withColumn("stage", F.lit("materialize"))
-        .withColumn("run_ts", F.lit(run_ts))
-    )
-    mpath = os.path.join(out_dir, "_metrics")
-    metrics.write.mode("append").parquet(mpath)
-    paths["_metrics"] = mpath
-    return paths

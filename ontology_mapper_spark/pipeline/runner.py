@@ -8,25 +8,38 @@ output table once, tagged with a deterministic **fingerprint** of
 stage whose committed output carries the expected fingerprint — the
 analogue of a cache hit keyed by sha256 of normalized inputs
 (cache/cache_manager.py:41-54) — and recomputes from the first stage whose
-inputs changed. Failed stages leave no committed fingerprint (write →
-fsync → marker-last), mirroring the reference's error-bypass rule of never
-caching failures (services/bioportal.py:95-98).
+inputs changed. Failed stages leave no committed fingerprint, mirroring
+the reference's error-bypass rule of never caching failures
+(services/bioportal.py:95-98): the marker file is written last, after
+Spark's write job has committed the data files and the manifest is on
+disk. That ordering is the only guarantee — nothing is fsynced, so a
+crashed process never leaves a marker over a half-written table, but a
+host crash can lose files written just before it.
 
-Scale notes: stage outputs are partitioned parquet (Iceberg layout-alike;
-swap the writer for an Iceberg catalog on a real cluster — catalog.py is
-the only seam). Mentions/links are written partitioned by a conv_id hash
-bucket so downstream stages and incremental re-runs prune by bucket.
+Every table the runner owns (the four stages, plus `snapshot_xrefs`,
+`edges` and `nodes`, which ride on their parent stage's fingerprint and
+event) is written by catalog.write_table and read by catalog.read_table —
+catalog.py is the only seam to swap for an Iceberg catalog on a real
+cluster. Mentions/links are written partitioned by a conv_id hash bucket
+so downstream stages and incremental re-runs prune by bucket. At the end
+of `run()` one driver-side parquet file lands under `_metrics`: a row per
+stage that ran (stage, n_rows, wall_s, run_ts, code_version), with n_rows
+the row count observed on the stage's write — no Spark job of its own.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import catalog
 
 CODE_VERSION = "r1.0"  # bump to invalidate all stage caches
 
@@ -79,6 +92,7 @@ class PipelineRunner:
         self.buckets = buckets
         self.resume = resume
         self.events: list[dict] = []
+        self._metrics: list[dict] = []
         os.makedirs(out_dir, exist_ok=True)
 
     # -- plumbing ----------------------------------------------------------
@@ -86,37 +100,57 @@ class PipelineRunner:
     def _stage_dir(self, stage: str) -> str:
         return os.path.join(self.out, stage)
 
-    def _run_stage(
-        self, stage: str, fingerprint: str, build: "callable", partition_by=None
+    def _table(
+        self,
+        stage: str,
+        fingerprint: str,
+        build: "callable",
+        partition_by: list[str] | None = None,
+        event: bool = True,
     ) -> DataFrame:
+        """The table `stage`, written once per fingerprint: on resume a
+        committed matching marker skips the build, otherwise build() is
+        written through catalog.write_table and the marker committed
+        last. `event=False` for side tables, which belong to their
+        parent stage's event."""
         path = self._stage_dir(stage)
-        t0 = time.time()
         if self.resume and _committed(path) == fingerprint:
-            self.events.append({"stage": stage, "status": "skipped", "sec": 0.0})
-            return self.spark.read.parquet(path)
-        df = build()
-        from ..catalog import write_table
-
-        write_table(df, path, partition_by=partition_by, snapshot_id=fingerprint)
+            if event:
+                self.events.append({"stage": stage, "status": "skipped", "sec": 0.0})
+            return catalog.read_table(self.spark, path)
+        t0 = time.time()
+        manifest = catalog.write_table(
+            build(), path, partition_by=partition_by, snapshot_id=fingerprint
+        )
         _commit(path, fingerprint, {"stage": stage, "run_ts": self.run_ts})
-        out = self.spark.read.parquet(path)
-        self._write_metrics(stage, out, time.time() - t0)
-        self.events.append(
-            {"stage": stage, "status": "ran", "sec": round(time.time() - t0, 2)}
-        )
-        return out
+        wall_s = time.time() - t0
+        if event:
+            self.events.append(
+                {"stage": stage, "status": "ran", "sec": round(wall_s, 2)}
+            )
+            self._metrics.append({
+                "stage": stage,
+                "n_rows": manifest["row_count"],
+                "wall_s": round(wall_s, 3),
+                "run_ts": self.run_ts,
+                "code_version": CODE_VERSION,
+            })
+        return catalog.read_table(self.spark, path)
 
-    def _write_metrics(self, stage: str, df: DataFrame, wall_s: float) -> None:
-        """Per-partition lineage + metrics rows (north_rule K4/A8)."""
-        metrics = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("n_rows"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("run_ts", F.lit(self.run_ts))
-            .withColumn("code_version", F.lit(CODE_VERSION))
-            .withColumn("wall_s", F.lit(round(wall_s, 3)))
+    def _write_metrics(self) -> None:
+        """This run's `_metrics` rows as one parquet file, written from the
+        driver (pyarrow, no Spark job); runs append files."""
+        if not self._metrics:
+            return
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = os.path.join(self.out, "_metrics")
+        os.makedirs(path, exist_ok=True)
+        pq.write_table(
+            pa.Table.from_pylist(self._metrics),
+            os.path.join(path, f"run-{uuid.uuid4().hex}.parquet"),
         )
-        metrics.write.mode("append").parquet(os.path.join(self.out, "_metrics"))
 
     # -- stages ------------------------------------------------------------
 
@@ -124,20 +158,14 @@ class PipelineRunner:
         from ..datagen.snapshot import build_snapshot
 
         fp = _fingerprint(CODE_VERSION, "snapshot", str(self.n_terms), str(self.seed))
-        terms = self._run_stage(
-            "snapshot",
-            fp,
-            lambda: build_snapshot(self.spark, self.n_terms, self.seed)[0],
-            partition_by=["ontology"],
+        built = functools.cache(
+            lambda: build_snapshot(self.spark, self.n_terms, self.seed)
         )
-        xpath = self._stage_dir("snapshot_xrefs")
-        if not (self.resume and _committed(xpath) == fp):
-            from ..datagen.snapshot import build_snapshot as bs
-
-            _, xrefs = bs(self.spark, self.n_terms, self.seed)
-            xrefs.write.mode("overwrite").parquet(xpath)
-            _commit(xpath, fp, {"stage": "snapshot_xrefs", "run_ts": self.run_ts})
-        return terms, self.spark.read.parquet(xpath)
+        terms = self._table(
+            "snapshot", fp, lambda: built()[0], partition_by=["ontology"]
+        )
+        xrefs = self._table("snapshot_xrefs", fp, lambda: built()[1], event=False)
+        return terms, xrefs
 
     def transcripts(self) -> DataFrame:
         from ..datagen.snapshot import ontology_terms_rows
@@ -160,7 +188,7 @@ class PipelineRunner:
                 "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.buckets))
             )
 
-        return self._run_stage("transcripts", fp, build, partition_by=["bucket"])
+        return self._table("transcripts", fp, build, partition_by=["bucket"])
 
     def mention_detect(self, terms: DataFrame, transcripts: DataFrame) -> DataFrame:
         from .mention_detect import build_dictionary, detect_mentions
@@ -178,7 +206,7 @@ class PipelineRunner:
                 "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.buckets))
             )
 
-        return self._run_stage("mention_detect", fp, build, partition_by=["bucket"])
+        return self._table("mention_detect", fp, build, partition_by=["bucket"])
 
     def link_score(self, terms: DataFrame, mentions: DataFrame) -> DataFrame:
         from .link_score import dictionary_idf, link_mentions
@@ -196,7 +224,7 @@ class PipelineRunner:
                 "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.buckets))
             )
 
-        return self._run_stage("link_score", fp, build, partition_by=["bucket"])
+        return self._table("link_score", fp, build, partition_by=["bucket"])
 
     def canonicalize(self, terms: DataFrame, xrefs: DataFrame) -> DataFrame:
         from .canonicalize import canonical_mapping
@@ -205,7 +233,7 @@ class PipelineRunner:
             CODE_VERSION, "canonicalize",
             _committed(self._stage_dir("snapshot")) or "",
         )
-        return self._run_stage(
+        return self._table(
             "canonicalize", fp, lambda: canonical_mapping(terms, xrefs)
         )
 
@@ -229,28 +257,24 @@ class PipelineRunner:
                 ).otherwise("metadata"),
             )
 
-        triples = self._run_stage(
-            "materialize", fp, build, partition_by=["pred_group"]
-        )
-
-        edges_path = self._stage_dir("edges")
-        if not (self.resume and _committed(edges_path) == fp):
-            comention_edges(links, window_turns=2).write.mode("overwrite").parquet(
-                edges_path
-            )
-            _commit(edges_path, fp, {"stage": "edges", "run_ts": self.run_ts})
-        nodes_path = self._stage_dir("nodes")
-        if not (self.resume and _committed(nodes_path) == fp):
+        def nodes() -> DataFrame:
+            # canonical entities with their mention stats
             canon_links = links.join(
                 F.broadcast(canonical), "class_iri", "left"
             ).withColumn("entity_id", F.coalesce("canonical_iri", "class_iri"))
-            nodes = canon_links.groupBy("entity_id").agg(
+            return canon_links.groupBy("entity_id").agg(
                 F.count("*").alias("n_mentions"),
                 F.approx_count_distinct("conv_id").alias("n_convs"),
                 F.min("label").alias("any_label"),
             )
-            nodes.write.mode("overwrite").parquet(nodes_path)
-            _commit(nodes_path, fp, {"stage": "nodes", "run_ts": self.run_ts})
+
+        # triples partitioned by pred_group: pred has ~8 distinct values,
+        # and mapping-only scans (the dominant access) prune for free
+        triples = self._table("materialize", fp, build, partition_by=["pred_group"])
+        self._table(
+            "edges", fp, lambda: comention_edges(links, window_turns=2), event=False
+        )
+        self._table("nodes", fp, nodes, event=False)
         return triples
 
     # -- orchestration -----------------------------------------------------
@@ -270,4 +294,5 @@ class PipelineRunner:
         canonical = self.canonicalize(terms, xrefs) if "canonicalize" in wanted else None
         if "materialize" in wanted and links is not None and canonical is not None:
             self.materialize(links, canonical)
+        self._write_metrics()
         return {"events": self.events, "out": self.out}

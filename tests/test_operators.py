@@ -126,6 +126,37 @@ def test_cc_path_graph_converges_logarithmically(spark):
     assert stats["iterations"] <= 14, stats  # ~log2(1024)+slack, not ~1024
 
 
+
+def test_cc_cut_dirs_under_tempdir_and_removed_at_exit(spark, monkeypatch):
+    """Distributed CC cuts lineage into a fresh dir per call under
+    tempfile's directory, and registers that dir's removal at exit."""
+    import atexit
+    import os
+    import tempfile
+
+    monkeypatch.delenv("OMX_CC_CUT_DIR", raising=False)
+    assert not spark.sparkContext.getCheckpointDir()
+    hooks = []
+    monkeypatch.setattr(
+        atexit, "register", lambda fn, *args: hooks.append((fn, args))
+    )
+    df = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")],
+                               ["src_iri", "dst_iri"])
+    for _ in range(2):
+        got = connected_components(df, local_threshold=0).collect()
+        assert {(r.node, r.component) for r in got} == {
+            ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+    dirs = [args[0] for _, args in hooks]
+    assert len(dirs) == 2 and len(set(dirs)) == 2
+    tmp = os.path.realpath(tempfile.gettempdir())
+    for d in dirs:
+        assert os.path.dirname(os.path.realpath(d)) == tmp
+        assert os.path.isdir(d) and os.listdir(d)
+    for fn, args in hooks:
+        fn(*args)
+    assert not any(os.path.exists(d) for d in dirs)
+
+
 def test_comention_edges_bruteforce(spark):
     rows = [
         ("c1", 0, "A"), ("c1", 1, "B"), ("c1", 2, "C"), ("c1", 5, "A"),

@@ -344,6 +344,42 @@ def test_qd46_split_parity_reconciles(spark):
     )
 
 
+
+def test_qd46_psi_cell_nonzero_on_skewed_split(spark, tmp_path):
+    """A split that breaks the language mix must show a nonzero PSI cell
+    in micro units (both engines once divided by 1e12, which rounded
+    every realistic cell to 0 and passed the hash gate anyway)."""
+    import hashlib
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ontology_mapper_spark.contract import QUERIES
+
+    def is_train(doc_id):  # the query's md5 rule
+        return hashlib.md5(f"|{doc_id}".encode()).hexdigest()[:8] < "cccccccd"
+
+    ids = list(range(400))
+    # train docs are 3/4 'en', holdout docs 1/4 'en': the mix is skewed
+    langs = ["en" if is_train(i) == (i % 4 != 0) else "de" for i in ids]
+    pq.write_table(
+        pa.table({"doc_id": pa.array(ids, pa.int64()), "lang": langs}),
+        str(tmp_path / "documents.parquet"),
+    )
+    rows = {
+        r["lang"]: r
+        for r in QUERIES["qd46_split_parity"](spark, str(tmp_path)).collect()
+    }
+    n_tr = sum(r["n_train"] for r in rows.values())
+    n_ho = sum(r["n_holdout"] for r in rows.values())
+    for lang, r in rows.items():
+        p, q = r["n_train"] / n_tr, r["n_holdout"] / n_ho
+        want = (p - q) * math.log(p / q) * 1_000_000
+        assert abs(r["psi_cell_micro"] - want) <= 2_000, (lang, r, want)
+        assert r["psi_cell_micro"] > 100_000
+
+
 def test_qd47_qd48_semantics(spark):
     from ontology_mapper_spark.contract import QUERIES
 
