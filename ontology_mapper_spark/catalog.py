@@ -70,22 +70,36 @@ def write_table(
     The schema is read back once, so the manifest records what a reader
     sees: partition columns last, with their inferred types.
     """
-    import hashlib
-    import json
-
     obs = Observation()
     writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     schema = df.sparkSession.read.parquet(path).schema
+    return write_manifest(
+        path, schema, partition_by or [], obs.get["rows"], snapshot_id
+    )
+
+
+def write_manifest(
+    path: str,
+    schema: StructType,
+    partition_by: list[str],
+    row_count: int,
+    snapshot_id: str | None = None,
+) -> dict:
+    """Write the `_manifest.json` read_table reads: `schema` must be the
+    one a reader of `path` sees (partition columns last)."""
+    import hashlib
+    import json
+
     manifest = {
         "format_version": "parquet-manifest-1",
         "schema": schema.jsonValue(),
-        "partition_spec": partition_by or [],
+        "partition_spec": partition_by,
         "snapshot_id": snapshot_id
         or hashlib.sha256(schema.simpleString().encode()).hexdigest()[:16],
-        "row_count": obs.get["rows"],
+        "row_count": row_count,
     }
     with open(os.path.join(path, "_manifest.json"), "w") as fh:
         json.dump(manifest, fh)

@@ -37,6 +37,34 @@ from pyspark.sql import functions as F
 LOCAL_CC_THRESHOLD = 250_000
 
 
+def local_components(pairs) -> dict:
+    """{node: component} over the (u, v) edges `pairs`, by a driver-side
+    union-find: component = min node id reachable, as connected_components
+    computes it. For edge sets that fit the driver."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in pairs:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[ru] = rv
+    rep: dict = {}
+    for n in parent:
+        r = find(n)
+        if r not in rep or n < rep[r]:
+            rep[r] = n
+    return {n: rep[find(n)] for n in parent}
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src_iri",
@@ -87,28 +115,7 @@ def connected_components(
         # the distributed loop (the wasted fetch is capped by the threshold)
         rows = pairs_df.limit(local_threshold + 1).collect()
         if len(rows) <= local_threshold:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for r0 in rows:
-                u, v = r0["u"], r0["v"]
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[ru] = rv
-            rep: dict = {}
-            for n in parent:
-                r = find(n)
-                if r not in rep or n < rep[r]:
-                    rep[r] = n
+            labels = local_components((r["u"], r["v"]) for r in rows)
             if stats is not None:
                 stats["iterations"] = 0
                 stats["local"] = True
@@ -121,9 +128,7 @@ def connected_components(
                     T.StructField("component", node_type, False),
                 ]
             )
-            return spark.createDataFrame(
-                [(n, rep[find(n)]) for n in parent], schema
-            )
+            return spark.createDataFrame(list(labels.items()), schema)
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))

@@ -1,91 +1,167 @@
-"""Bucket-granular incremental mention detection.
+"""Bucket-granular incremental stages and the bucket-table protocol they share.
 
 Stage-level resume (runner.py) skips a whole stage only when NOTHING
 changed. At 10^12 turns the realistic case is a trickle: new conversations
-land in a few conv_id hash buckets per batch. This module recomputes ONLY
-those buckets:
+land in a few conv_id hash buckets per batch, and each incremental stage
+recomputes ONLY those buckets. Every incremental table is parquet
+partitioned by an int `bucket` column and follows one protocol:
 
-1. per-bucket input fingerprints = sum of xxhash64(conv_id, turn_idx,
-   text) per bucket (order-independent, distributed, one map-side agg);
-2. compare against the fingerprints recorded at last run;
-3. re-run detection on changed buckets only and overwrite exactly those
-   partitions (overwrite_buckets — untouched bucket directories stay
-   as-is, so the write cost is proportional to the delta, not the
-   corpus).
-
-This composes with stage fingerprints: the stage marker stores the
-per-bucket map instead of one hash.
+* layout — `bucket=<b>` directories plus a `_manifest.json` holding the
+  schema a reader sees, so reads go through catalog.read_table without a
+  schema-inference job;
+* marker — `_BUCKET_FINGERPRINTS.json`, {bucket: int};
+* staleness — a stage's marker value for bucket b is hash(upstream value
+  of b, stage version). A bucket whose value differs from the marker is
+  recomputed, and a marked bucket with no upstream value is removed
+  (refresh_buckets). Detect's upstream is the transcripts' content
+  fingerprint (bucket_fingerprints) and its version the pattern list;
+  every later stage's upstream is the marker of the table it reads, so
+  a stage never re-scans its input to find what changed;
+* write — write_buckets writes the recomputed buckets to a staging
+  directory, swaps their directories in, and commits the marker last, so
+  a write that dies before its marker commits is recomputed by the next
+  batch, and downstream stages only ever see committed upstream markers.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import shutil
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+from ..catalog import read_table, write_manifest
 
 BUCKET_MARKER = "_BUCKET_FINGERPRINTS.json"
+TRANSCRIPT_COLS = ("conv_id", "turn_idx", "text")
 
 
-def overwrite_buckets(df: DataFrame | None, path: str, drop: list[int]) -> int:
-    """Delete the `bucket=<b>` directories of the table at `path` for every
-    b in `drop`, then write `df` (partitioned by `bucket`) over the
-    buckets it holds; returns the rows written. Buckets that are in
-    neither stay as they are: per-write dynamic partition overwrite, so
-    the cost is the delta's, not the table's.
-
-    Dynamic overwrite replaces only partitions PRESENT in `df`, so a
-    changed bucket whose recomputation is empty would keep its stale
-    directory: callers pass every changed and removed bucket in `drop`.
-    The directories go before the lazy write runs, so `df` must not read
-    from `path`. `df=None` only drops.
-    """
-    os.makedirs(path, exist_ok=True)
-    for b in drop:
-        shutil.rmtree(os.path.join(path, f"bucket={b}"), ignore_errors=True)
-    if df is None:
-        return 0
-    obs = Observation()
-    (
-        df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    return obs.get["rows"]
+def bucket_of(col: str, buckets: int) -> Column:
+    """The bucket of a row of any incremental table."""
+    return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
 
 
-def bucket_fingerprints(transcripts: DataFrame, buckets: int = 32) -> dict[str, int]:
-    """{bucket: order-independent content hash} over (conv_id, turn_idx, text)."""
+def bucket_fingerprints(
+    df: DataFrame,
+    buckets: int = 32,
+    cols: tuple[str, ...] = TRANSCRIPT_COLS,
+    key: str = "conv_id",
+) -> dict[str, int]:
+    """{bucket of `key`: order-independent content hash of `cols`}: one
+    map-side partial aggregation, no shuffle of row data."""
     rows = (
-        transcripts.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets))
-        )
-        .groupBy("bucket")
-        .agg(
-            F.sum(
-                F.xxhash64("conv_id", "turn_idx", "text").cast("decimal(38,0)")
-            ).alias("fp")
-        )
+        df.groupBy(bucket_of(key, buckets).alias("bucket"))
+        .agg(F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("fp"))
         .collect()
     )
     return {str(r["bucket"]): int(r["fp"]) for r in rows}
 
 
-def _load_marker(path: str) -> dict[str, int]:
+def load_marker(path: str) -> dict[str, int]:
     try:
         with open(os.path.join(path, BUCKET_MARKER)) as fh:
-            return {k: int(v) for k, v in json.load(fh).items()}
+            # non-bucket keys (an older link marker's "__dict_version__")
+            # carry no bucket state
+            return {k: int(v) for k, v in json.load(fh).items() if k.isdigit()}
     except (OSError, json.JSONDecodeError):
         return {}
 
 
-def _save_marker(path: str, fps: dict[str, int]) -> None:
+def _save_marker(path: str, marker: dict[str, int]) -> None:
     with open(os.path.join(path, BUCKET_MARKER), "w") as fh:
-        json.dump(fps, fh)
+        json.dump(marker, fh)
+
+
+def _reader_schema(schema: StructType) -> StructType:
+    """The schema spark.read.parquet infers for a bucket table written
+    from `schema`: every field nullable (parquet stores them so) and
+    `bucket` an int partition column, last."""
+    nullable = re.sub(
+        r'"(nullable|containsNull|valueContainsNull)": false',
+        r'"\1": true',
+        json.dumps(schema.jsonValue()),
+    )
+    fields = [
+        f for f in StructType.fromJson(json.loads(nullable)).fields
+        if f.name != "bucket"
+    ]
+    return StructType(fields + [StructField("bucket", IntegerType(), True)])
+
+
+def write_buckets(
+    df: DataFrame | None, path: str, replace: list[int], marker: dict[str, int]
+) -> int:
+    """Replace the `bucket=<b>` directories of the table at `path` for every
+    b in `replace` with the rows of `df` (partitioned by `bucket`), then
+    commit `marker`; returns the rows written. Other buckets stay as they
+    are, so the cost is the delta's, not the table's.
+
+    `df` is written to `<path>.staging` first, so it may read the buckets
+    it replaces; a bucket in `replace` that `df` has no rows for ends up
+    deleted. `df=None` only deletes. The swap is not atomic across
+    buckets: the marker, committed last, is what says the table is whole.
+    """
+    os.makedirs(path, exist_ok=True)
+    staging = path.rstrip("/") + ".staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    rows = 0
+    if df is not None:
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.partitionBy(
+            "bucket"
+        ).parquet(staging)
+        rows = obs.get["rows"]
+    for b in replace:
+        dst = os.path.join(path, f"bucket={b}")
+        shutil.rmtree(dst, ignore_errors=True)
+        src = os.path.join(staging, f"bucket={b}")
+        if os.path.exists(src):
+            shutil.move(src, dst)
+    shutil.rmtree(staging, ignore_errors=True)
+    if df is not None:
+        write_manifest(path, _reader_schema(df.schema), ["bucket"], rows)
+    _save_marker(path, marker)
+    return rows
+
+
+def refresh_buckets(
+    path: str,
+    upstream: dict[str, int],
+    version,
+    build: Callable[[list[int]], DataFrame],
+) -> dict:
+    """Bring the bucket table at `path` up to date with `upstream`
+    ({bucket: value}) under the stage's `version` (any JSON value).
+
+    `build(changed)` returns the recomputed rows, with their `bucket`
+    column, of the changed buckets; it is called only when some bucket
+    changed. Returns {'n_buckets', 'changed_buckets', 'removed_buckets',
+    'rows_written'}.
+    """
+    marker = {
+        b: int(hashlib.sha256(json.dumps([v, version]).encode()).hexdigest()[:15], 16)
+        for b, v in upstream.items()
+    }
+    previous = load_marker(path)
+    changed = sorted(int(b) for b in marker if previous.get(b) != marker[b])
+    removed = sorted(int(b) for b in previous if b not in marker)
+    result = {
+        "n_buckets": len(marker),
+        "changed_buckets": changed,
+        "removed_buckets": removed,
+        "rows_written": 0,
+    }
+    if changed or removed:
+        result["rows_written"] = write_buckets(
+            build(changed) if changed else None, path, changed + removed, marker
+        )
+    return result
 
 
 def incremental_detect(
@@ -95,57 +171,19 @@ def incremental_detect(
     out_path: str,
     buckets: int = 32,
 ) -> dict:
-    """Detect mentions for changed buckets only; returns
-    {'changed_buckets': [...], 'n_buckets': N, 'rows_written': int}.
-
-    Output layout: parquet partitioned by `bucket`; only changed and
-    removed bucket partitions are rewritten (overwrite_buckets).
-    """
+    """Detect mentions in the conv_id buckets whose transcripts or whose
+    pattern list changed since the last run (refresh_buckets' result)."""
     from .mention_detect import detect_mentions
 
-    current = bucket_fingerprints(transcripts, buckets)
-    previous = _load_marker(out_path) if os.path.exists(out_path) else {}
-    changed = sorted(
-        int(b) for b in current if previous.get(b) != current[b]
+    def build(changed: list[int]) -> DataFrame:
+        delta = transcripts.where(bucket_of("conv_id", buckets).isin(changed))
+        return detect_mentions(
+            spark, delta.select(*TRANSCRIPT_COLS), patterns
+        ).withColumn("bucket", bucket_of("conv_id", buckets))
+
+    return refresh_buckets(
+        out_path, bucket_fingerprints(transcripts, buckets), patterns, build
     )
-    # buckets that vanished entirely are stale leftovers → treat as changed
-    removed = sorted(int(b) for b in previous if b not in current)
-
-    result = {
-        "n_buckets": len(current),
-        "changed_buckets": changed,
-        "removed_buckets": removed,
-        "rows_written": 0,
-    }
-    if not changed and not removed:
-        return result
-
-    mentions = None
-    if changed:
-        delta = transcripts.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets))
-        ).where(F.col("bucket").isin(changed))
-        mentions = detect_mentions(
-            spark, delta.select("conv_id", "turn_idx", "text"), patterns
-        ).withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets)))
-    result["rows_written"] = overwrite_buckets(mentions, out_path, changed + removed)
-    _save_marker(out_path, current)
-    return result
-
-
-def _mention_bucket_fps(mentions: DataFrame) -> dict[str, int]:
-    rows = (
-        mentions.groupBy("bucket")
-        .agg(
-            F.sum(
-                F.xxhash64(
-                    "conv_id", "turn_idx", "begin", "end", "pattern"
-                ).cast("decimal(38,0)")
-            ).alias("fp")
-        )
-        .collect()
-    )
-    return {str(r["bucket"]): int(r["fp"]) for r in rows}
 
 
 def incremental_link(
@@ -155,53 +193,22 @@ def incremental_link(
     out_path: str,
     dict_version: str = "v1",
 ) -> dict:
-    """Link only mention buckets that changed since the last link run
-    (or all, when the dictionary version changes — a new snapshot
+    """Link the mention buckets whose detect marker changed since the last
+    link run (or all, when `dict_version` changes: a new snapshot
     invalidates every bucket).
 
-    Same delta-proportional pattern as incremental_detect: per-bucket
-    fingerprints gate work; overwrite_buckets rewrites only the
-    recomputed bucket directories. The link itself stays the broadcast
-    decision-table join (zero shuffle). The mentions' own `bucket` column
-    is preserved verbatim — never recomputed — so partition alignment
-    with the detect stage is structural.
+    The link itself stays the broadcast decision-table join (zero
+    shuffle). The mentions' own `bucket` column is kept verbatim, so
+    partition alignment with the detect stage is structural.
     """
-    import hashlib
-
     from .link_score import rank_dictionary
 
-    # stable across processes (python's hash() is salted per run)
-    version_fp = int(hashlib.sha256(dict_version.encode()).hexdigest()[:12], 16)
-
-    # an all-empty detect output has no parquet files at all — treat as an
-    # empty mention set instead of failing schema inference
-    if any(d.startswith("bucket=") for d in os.listdir(mentions_path)):
-        mentions = spark.read.parquet(mentions_path)
-        current = _mention_bucket_fps(mentions)
-    else:
-        mentions = None
-        current = {}
-    marker = _load_marker(out_path) if os.path.exists(out_path) else {}
-    prev_version = marker.pop("__dict_version__", None)
-    if prev_version is not None and prev_version != version_fp:
-        marker = {}  # dictionary changed → everything is stale
-    changed = sorted(int(b) for b in current if marker.get(b) != current[b])
-    removed = sorted(int(b) for b in marker if b not in current)
-
-    result = {
-        "n_buckets": len(current),
-        "changed_buckets": changed,
-        "removed_buckets": removed,
-    }
-    if not changed and not removed:
-        return result
-
-    links = None
-    if changed:
+    def build(changed: list[int]) -> DataFrame:
         ranked = F.broadcast(rank_dictionary(spark, terms, idf=None))
-        links = mentions.where(F.col("bucket").isin(changed)).join(
-            ranked, "pattern", "inner"
+        return (
+            read_table(spark, mentions_path)
+            .where(F.col("bucket").isin(changed))
+            .join(ranked, "pattern", "inner")
         )
-    overwrite_buckets(links, out_path, changed + removed)
-    _save_marker(out_path, {**current, "__dict_version__": version_fp})
-    return result
+
+    return refresh_buckets(out_path, load_marker(mentions_path), dict_version, build)

@@ -8,10 +8,10 @@ ids — which equals the CC result over the CONTRACTED graph whose nodes are
 old component ids (each old id is already the min of its members). So a
 delta batch costs:
 
-1. look up the old component of each delta endpoint (broadcast of the
-   delta-sized node set against the bucket-partitioned label table — a
-   map-side semi-join scan, never a shuffle of the full table);
-2. run connected_components over the contracted delta edge set (delta-sized
+1. look up the old component of each delta endpoint (a filter on the
+   delta-sized node set over the bucket-partitioned label table — a
+   map-side scan, never a shuffle of the full table);
+2. solve CC over the contracted delta edge set on the driver (delta-sized
    — thousands of rows even when 10^12 labels exist);
 3. broadcast the old→new component remap back over the label table and
    rewrite ONLY the buckets containing a remapped row or a brand-new node
@@ -23,47 +23,39 @@ in tests), at delta-proportional cost.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .canonicalize import LOCAL_CC_THRESHOLD, connected_components
-from .incremental import _load_marker, _save_marker, overwrite_buckets
+from ..catalog import read_table
+from .canonicalize import local_components
+from .incremental import (
+    bucket_fingerprints,
+    bucket_of,
+    load_marker,
+    refresh_buckets,
+    write_buckets,
+)
 
 
-def _bucket(col, buckets: int):
-    return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
-
-
-def _labels_bucket_fps(labels: DataFrame) -> dict[str, int]:
-    """Per-bucket order-insensitive fingerprint of (node, component) rows —
-    the label table's commit marker payload (same pattern as
-    _links_bucket_fps). Map-side partial agg; no shuffle of row data."""
-    return {
-        str(r["bucket"]): int(r["fp"])
-        for r in labels.groupBy("bucket")
-        .agg(
-            F.sum(
-                F.xxhash64("node", "component").cast("decimal(38,0)")
-            ).alias("fp")
-        )
-        .collect()
-    }
+def _labels_fps(labels: DataFrame, buckets: int) -> dict[str, int]:
+    """The label table's marker: a per-bucket content fingerprint of its
+    (node, component) rows, verified by incremental_components."""
+    return bucket_fingerprints(labels, buckets, ("node", "component"), "node")
 
 
 def write_component_labels(
     labels: DataFrame, out_path: str, buckets: int = 32
-) -> None:
-    """(node, component) → parquet partitioned by node-hash bucket, plus a
-    per-bucket fingerprint marker so incremental_components can detect a
-    mid-swap crash (ADVICE r2)."""
-    labels.withColumn("bucket", _bucket(F.col("node"), buckets)).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(out_path)
-    spark = labels.sparkSession
-    _save_marker(out_path, _labels_bucket_fps(spark.read.parquet(out_path)))
+) -> int:
+    """(node, component) → a bucket table partitioned by node-hash bucket,
+    every bucket replaced, with a content-fingerprint marker so
+    incremental_components can detect a mid-swap crash (ADVICE r2).
+    Returns the rows written."""
+    return write_buckets(
+        labels.withColumn("bucket", bucket_of("node", buckets)),
+        out_path,
+        list(range(buckets)),
+        _labels_fps(labels, buckets),
+    )
 
 
 def incremental_components(
@@ -76,158 +68,102 @@ def incremental_components(
 ) -> dict:
     """Merge `delta_edges` into the label table at `labels_path` in place.
 
-    Returns {'changed_buckets': [...], 'n_merges': int, 'n_new_nodes': int}.
-    Every join against the full label table broadcasts the delta side; the
-    only full-table work is map-side (the changed-bucket filter and the
-    fingerprint verification scan).
+    Returns {'changed_buckets': [...], 'removed_buckets': [], 'n_merges':
+    int, 'n_new_nodes': int}. The delta is batch-sized and collected once;
+    the only full-table work is map-side (the fingerprint verification,
+    the delta-endpoint lookup and the changed-bucket filter).
 
-    Crash safety (ADVICE r2): the per-bucket swap below is not atomic
-    across buckets, so the table carries a per-bucket fingerprint marker
-    (written by write_component_labels and updated after every successful
-    swap). On entry the marker is re-verified against the table; a
-    mismatch means a previous call died mid-swap (some buckets remapped,
-    some stale) and this raises RuntimeError rather than silently merging
-    onto a half-updated table — rebuild with write_component_labels(full
-    recompute). Tables written before markers existed (no marker file)
-    skip verification and adopt a marker on their first successful batch.
+    Crash safety (ADVICE r2): the per-bucket swap is not atomic across
+    buckets, so the table carries a per-bucket content-fingerprint marker
+    (written by write_component_labels and committed after every swap).
+    On entry the marker is re-verified against the table; a mismatch means
+    a previous call died mid-swap (some buckets remapped, some stale) and
+    this raises RuntimeError rather than silently merging onto a
+    half-updated table — rebuild with write_component_labels (full
+    recompute). Tables without a marker skip verification and adopt one
+    on their first successful batch.
     """
-    labels = spark.read.parquet(labels_path)
-    marker = _load_marker(labels_path)
-    if marker:
-        current = _labels_bucket_fps(labels)
-        if current != marker:
-            bad = sorted(
-                set(current) ^ set(marker)
-                | {b for b in set(current) & set(marker) if current[b] != marker[b]}
-            )
-            raise RuntimeError(
-                f"label table {labels_path} failed fingerprint verification "
-                f"(buckets {bad[:8]}{'...' if len(bad) > 8 else ''}) — a "
-                f"previous incremental_components died mid-swap; rebuild the "
-                f"table with write_component_labels from a full recompute"
-            )
-
-    delta = delta_edges.select(
-        F.col(src).cast("string").alias("u"), F.col(dst).cast("string").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    delta_nodes = (
-        delta.select(F.col("u").alias("node"))
-        .unionByName(delta.select(F.col("v").alias("node")))
-        .distinct()
-    )
-
-    # 1. old components of delta endpoints
-    old_of = labels.join(F.broadcast(delta_nodes), "node", "inner").select(
-        "node", "component"
-    )
-    old_u = old_of.select(F.col("node").alias("u"), F.col("component").alias("cu"))
-    old_v = old_of.select(F.col("node").alias("v"), F.col("component").alias("cv"))
-
-    # 2. contract to component space; solve the delta-sized CC
-    contracted = (
-        delta.join(F.broadcast(old_u), "u", "left")
-        .join(F.broadcast(old_v), "v", "left")
-        .select(
-            F.coalesce("cu", F.col("u")).alias("src_iri"),
-            F.coalesce("cv", F.col("v")).alias("dst_iri"),
+    labels = read_table(spark, labels_path)
+    marker = load_marker(labels_path)
+    current = _labels_fps(labels, buckets)
+    if marker and current != marker:
+        bad = sorted(
+            set(current) ^ set(marker)
+            | {b for b in set(current) & set(marker) if current[b] != marker[b]}
         )
-    )
-    small_rows = connected_components(
-        contracted, local_threshold=LOCAL_CC_THRESHOLD
-    ).collect()
-    remap_rows = [
-        (r["node"], r["component"])
-        for r in small_rows
-        if r["node"] != r["component"]
-    ]
-    small_map = {r["node"]: r["component"] for r in small_rows}
+        raise RuntimeError(
+            f"label table {labels_path} failed fingerprint verification "
+            f"(buckets {bad[:8]}{'...' if len(bad) > 8 else ''}) — a "
+            f"previous incremental_components died mid-swap; rebuild the "
+            f"table with write_component_labels from a full recompute"
+        )
 
-    # brand-new nodes (absent from the old labels): their contracted id is
-    # themselves, so their merged component is small_map[self]
-    known = {r["node"] for r in old_of.collect()}
-    new_nodes = [
-        (n, small_map.get(n, n))
-        for n in (r["node"] for r in delta_nodes.collect())
-        if n not in known
+    edges = [
+        (r["u"], r["v"])
+        for r in delta_edges.select(
+            F.col(src).cast("string").alias("u"),
+            F.col(dst).cast("string").alias("v"),
+        )
+        .where(F.col("u") != F.col("v"))
+        .collect()
     ]
+    nodes = sorted({n for e in edges for n in e})
+
+    # 1. old components of delta endpoints (one map-side scan)
+    old = {
+        r["node"]: r["component"]
+        for r in labels.where(F.col("node").isin(nodes))
+        .select("node", "component")
+        .collect()
+    }
+
+    # 2. contract to component space; solve the delta-sized CC on the driver
+    small = local_components((old.get(u, u), old.get(v, v)) for u, v in edges)
+    remap_rows = [(n, c) for n, c in small.items() if n != c]
+    # brand-new nodes (absent from the old labels): their contracted id is
+    # themselves, so their merged component is small[self]
+    new_nodes = [(n, small.get(n, n)) for n in nodes if n not in old]
 
     result = {
         "n_merges": len(remap_rows),
         "n_new_nodes": len(new_nodes),
         "changed_buckets": [],
+        "removed_buckets": [],
     }
     if not remap_rows and not new_nodes:
         return result
 
-    # 3. changed buckets and the bucket-local rewrite
-    remap_df = (
-        spark.createDataFrame(remap_rows, ["component", "_new_component"])
-        if remap_rows
-        else spark.createDataFrame([], "component string, _new_component string")
+    # 3. changed buckets (a remapped component or a new node) and their
+    # rewrite, which reads the buckets it replaces
+    remap_df = spark.createDataFrame(
+        remap_rows, "component string, _new_component string"
     )
-    changed = {
+    new_df = spark.createDataFrame(
+        new_nodes, "node string, component string"
+    ).withColumn("bucket", bucket_of("node", buckets))
+    changed = sorted(
         r["bucket"]
-        for r in labels.join(F.broadcast(remap_df), "component", "inner")
+        for r in labels.where(F.col("component").isin([c for c, _ in remap_rows]))
         .select("bucket")
+        .unionByName(new_df.select("bucket"))
         .distinct()
         .collect()
-    }
-    new_df = None
-    if new_nodes:
-        new_df = spark.createDataFrame(new_nodes, ["node", "component"])
-        changed |= {
-            r["b"]
-            for r in new_df.select(_bucket(F.col("node"), buckets).alias("b"))
-            .distinct()
-            .collect()
-        }
-    changed_list = sorted(int(b) for b in changed)
-    result["changed_buckets"] = changed_list
-
+    )
+    result["changed_buckets"] = changed
     updated = (
-        labels.where(F.col("bucket").isin(changed_list))
+        labels.where(F.col("bucket").isin(changed))
         .join(F.broadcast(remap_df), "component", "left")
         .select(
             "node",
             F.coalesce("_new_component", "component").alias("component"),
-            F.col("bucket").cast("int").alias("bucket"),
+            "bucket",
         )
+        .unionByName(new_df)
     )
-    if new_df is not None:
-        updated = updated.unionByName(
-            new_df.withColumn("bucket", _bucket(F.col("node"), buckets))
-        )
-
-    # The rewrite READS the same bucket dirs it replaces, so it must land
-    # in a staging dir first (deleting before the lazy write executes would
-    # yank files out from under the scan); bucket dirs then swap in whole —
-    # the same staging-plus-rename pattern a DFS commit uses. Also the
-    # stale-partition guard: a changed bucket whose rewrite is empty stays
-    # deleted.
-    staging = labels_path.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    updated.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    for b in changed_list:
-        shutil.rmtree(os.path.join(labels_path, f"bucket={b}"), ignore_errors=True)
-        src_dir = os.path.join(staging, f"bucket={b}")
-        if os.path.exists(src_dir):
-            shutil.move(src_dir, os.path.join(labels_path, f"bucket={b}"))
-    shutil.rmtree(staging, ignore_errors=True)
-
-    # Commit marker: fingerprint the swapped buckets as they now exist on
-    # disk (changed-bucket read only — partition-pruned); legacy tables
-    # without a marker adopt a full one here.
-    post = spark.read.parquet(labels_path)
-    if marker:
-        new_fps = dict(marker)
-        for b in changed_list:
-            new_fps.pop(str(b), None)
-        new_fps.update(
-            _labels_bucket_fps(post.where(F.col("bucket").isin(changed_list)))
-        )
-    else:
-        new_fps = _labels_bucket_fps(post)
-    _save_marker(labels_path, new_fps)
+    kept = {b: fp for b, fp in current.items() if int(b) not in changed}
+    write_buckets(
+        updated, labels_path, changed, {**kept, **_labels_fps(updated, buckets)}
+    )
     return result
 
 
@@ -237,48 +173,21 @@ def incremental_materialize(
     out_path: str,
     run_ts: str | None = None,
 ) -> dict:
-    """Triple materialization for changed link buckets only.
+    """Triples for the link buckets whose link marker (or `run_ts`)
+    changed: one extract_triples plan over all of them.
 
     Triples are written partitioned by the links' conv-hash bucket and
-    deduped WITHIN each bucket (extract_triples' global set semantics
-    cannot be kept bucket-local; the periodic `compact_triples` pass
-    restores them — the standard delta-ingest + compaction split).
+    deduped WITHIN each bucket (extract_triples' set semantics scoped by
+    `bucket`); the periodic `compact_triples` pass restores global set
+    semantics — the standard delta-ingest + compaction split.
     """
     from .materialize import extract_triples
 
-    links = spark.read.parquet(links_path)
-    fps = _links_bucket_fps(links)
-    marker = _load_marker(out_path) if os.path.exists(out_path) else {}
-    changed = sorted(int(b) for b in fps if marker.get(b) != fps[b])
-    removed = sorted(int(b) for b in marker if b not in fps)
-    result = {"changed_buckets": changed, "removed_buckets": removed}
-    if not changed and not removed:
-        return result
+    def build(changed: list[int]) -> DataFrame:
+        links = read_table(spark, links_path).where(F.col("bucket").isin(changed))
+        return extract_triples(links, run_ts=run_ts, by=("bucket",))
 
-    delta_triples = None
-    for b in changed:
-        bt = extract_triples(
-            links.where(F.col("bucket") == b).drop("bucket"), run_ts=run_ts
-        ).withColumn("bucket", F.lit(b).cast("int"))
-        delta_triples = bt if delta_triples is None else delta_triples.unionByName(bt)
-    overwrite_buckets(delta_triples, out_path, changed + removed)
-    _save_marker(out_path, fps)
-    return result
-
-
-def _links_bucket_fps(links: DataFrame) -> dict[str, int]:
-    return {
-        str(r["bucket"]): int(r["fp"])
-        for r in links.groupBy("bucket")
-        .agg(
-            F.sum(
-                F.xxhash64(
-                    "conv_id", "turn_idx", "begin", "end", "pattern", "class_iri"
-                ).cast("decimal(38,0)")
-            ).alias("fp")
-        )
-        .collect()
-    }
+    return refresh_buckets(out_path, load_marker(links_path), run_ts, build)
 
 
 def incremental_edges(
@@ -286,37 +195,28 @@ def incremental_edges(
     links_path: str,
     out_path: str,
     window_turns: int = 2,
-    entity_col: str = "class_iri",
 ) -> dict:
-    """Co-mention edges for changed link buckets only.
+    """Co-mention edges for the link buckets whose link marker (or
+    `window_turns`) changed.
 
     The co-mention self-join is conversation-local and bucket = hash of
     conv_id, so per-bucket PARTIAL edge counts are exact; only the final
     per-(a, b) sum crosses buckets, which `compact_edges` performs at read
     (sum is algebraic, so bucket-partial + compact == full recompute).
     """
-    links = spark.read.parquet(links_path)
-    fps = _links_bucket_fps(links)
-    marker = _load_marker(out_path) if os.path.exists(out_path) else {}
-    changed = sorted(int(b) for b in fps if marker.get(b) != fps[b])
-    removed = sorted(int(b) for b in marker if b not in fps)
-    result = {"changed_buckets": changed, "removed_buckets": removed}
-    if not changed and not removed:
-        return result
 
-    partial = None
-    if changed:
+    def build(changed: list[int]) -> DataFrame:
         ments = (
-            links.where(F.col("bucket").isin(changed))
+            read_table(spark, links_path)
+            .where(F.col("bucket").isin(changed))
             .select(
-                "bucket", "conv_id", "turn_idx",
-                F.col(entity_col).alias("entity"),
+                "bucket", "conv_id", "turn_idx", F.col("class_iri").alias("entity")
             )
             .distinct()
         )
         a = ments.alias("a")
         b_ = ments.alias("b")
-        partial = (
+        return (
             a.join(
                 b_,
                 (F.col("a.conv_id") == F.col("b.conv_id"))
@@ -331,16 +231,15 @@ def incremental_edges(
             )
             .agg(F.count("*").alias("n_comentions"))
         )
-    overwrite_buckets(partial, out_path, changed + removed)
-    _save_marker(out_path, fps)
-    return result
+
+    return refresh_buckets(out_path, load_marker(links_path), window_turns, build)
 
 
 def compact_edges(spark: SparkSession, edges_path: str) -> DataFrame:
     """Bucket-partial co-mention counts → global (entity_a, entity_b,
     n_comentions) — an algebraic sum, exact vs a full recompute."""
     return (
-        spark.read.parquet(edges_path)
+        read_table(spark, edges_path)
         .groupBy("entity_a", "entity_b")
         .agg(F.sum("n_comentions").alias("n_comentions"))
     )
@@ -350,7 +249,7 @@ def compact_triples(spark: SparkSession, triples_path: str) -> DataFrame:
     """Global set-semantics view over bucket-partitioned delta triples
     (dropDuplicates on the triple key — run periodically or at read)."""
     return (
-        spark.read.parquet(triples_path)
+        read_table(spark, triples_path)
         .drop("bucket")
         .dropDuplicates(["subj", "pred", "obj"])
     )

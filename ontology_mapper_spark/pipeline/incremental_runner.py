@@ -6,18 +6,29 @@ stage-granular: a stage either skips wholesale or recomputes wholesale).
 Here a batch that adds a handful of conversations and xref edges costs
 work proportional to the delta:
 
-* detect/link — per-bucket fingerprints gate recomputation
+* detect/link — per-bucket markers gate recomputation
   (pipeline/incremental.py);
 * canonicalize — delta edges contract onto the existing component
   labeling (pipeline/incremental_cc.incremental_components);
-* materialize — changed link buckets re-extract triples with bucket-local
-  dedup; compact_triples restores global set semantics at read
-  (pipeline/incremental_cc.incremental_materialize).
+* materialize/edges — changed link buckets re-extract triples and partial
+  co-mention counts with bucket-local set semantics; compact_triples and
+  compact_edges restore global ones at read (pipeline/incremental_cc).
 
-Layout under `out_dir`: mentions/ links/ canonical_labels/ triples/, each
-parquet partitioned by bucket (canonical by node-hash bucket) with its own
-marker files — so batches are restartable mid-chain: a crashed stage
-recomputes only what its marker says is stale.
+Layout under `out_dir`: mentions/ links/ triples/ edges/ (parquet
+partitioned by conv_id-hash bucket) and canonical_labels/ (by node-hash
+bucket), each written by incremental.write_buckets with a `_manifest.json`
+and a `_BUCKET_FINGERPRINTS.json` marker, committed after the data:
+
+* mentions/ — hash(transcript content fingerprint of the bucket, pattern
+  list);
+* links/ — hash(mentions' marker value, dict_version);
+* triples/ — hash(links' marker value, run_ts);
+* edges/ — hash(links' marker value, window_turns);
+* canonical_labels/ — the content fingerprint of the bucket's (node,
+  component) rows, verified before every merge.
+
+So batches are restartable mid-chain: a stage that died before its marker
+committed recomputes its stale buckets on the next batch.
 """
 
 from __future__ import annotations
@@ -26,7 +37,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .incremental import incremental_detect, incremental_link
+from ..catalog import read_manifest
+from .incremental import incremental_detect, incremental_link, load_marker
 from .incremental_cc import (
     incremental_components,
     incremental_edges,
@@ -56,41 +68,32 @@ def run_incremental_batch(
     m_path = os.path.join(out_dir, "mentions")
     l_path = os.path.join(out_dir, "links")
     c_path = os.path.join(out_dir, "canonical_labels")
-    t_path = os.path.join(out_dir, "triples")
 
     summary: dict = {}
-    pats = build_dictionary(terms)
     summary["detect"] = incremental_detect(
-        spark, transcripts, pats, m_path, buckets=buckets
+        spark, transcripts, build_dictionary(terms), m_path, buckets=buckets
     )
     summary["link"] = incremental_link(
         spark, m_path, terms, l_path, dict_version=dict_version
     )
 
-    if xref_delta is not None:
-        if not os.path.exists(os.path.join(c_path, "_SUCCESS")) and not any(
-            d.startswith("bucket=") for d in (
-                os.listdir(c_path) if os.path.isdir(c_path) else []
-            )
-        ):
-            # bootstrap: first batch runs the full CC and seeds the table
-            labels = connected_components(
-                xref_delta, local_threshold=LOCAL_CC_THRESHOLD
-            )
-            write_component_labels(labels, c_path, buckets=buckets)
-            summary["canonicalize"] = {
-                "bootstrap": True,
-                "n_nodes": labels.count(),
-            }
-        else:
-            summary["canonicalize"] = incremental_components(
-                spark, c_path, xref_delta, buckets=buckets
-            )
-    else:
+    if xref_delta is None:
         summary["canonicalize"] = {"skipped": True}
+    elif not load_marker(c_path) and read_manifest(c_path) is None:
+        # bootstrap: the first batch with edges runs the full CC and seeds
+        # the table
+        labels = connected_components(xref_delta, local_threshold=LOCAL_CC_THRESHOLD)
+        summary["canonicalize"] = {
+            "bootstrap": True,
+            "n_nodes": write_component_labels(labels, c_path, buckets=buckets),
+        }
+    else:
+        summary["canonicalize"] = incremental_components(
+            spark, c_path, xref_delta, buckets=buckets
+        )
 
     summary["materialize"] = incremental_materialize(
-        spark, l_path, t_path, run_ts=run_ts
+        spark, l_path, os.path.join(out_dir, "triples"), run_ts=run_ts
     )
     summary["edges"] = incremental_edges(
         spark, l_path, os.path.join(out_dir, "edges"), window_turns=2

@@ -40,9 +40,15 @@ BP_ONT_NS = "http://bioportal.bioontology.org/ontologies/"
 TRIPLE_COLS = ("subj", "pred", "obj", "obj_type", "lang")
 
 
-def extract_triples(links: DataFrame, run_ts: str | None = None) -> DataFrame:
+def extract_triples(
+    links: DataFrame, run_ts: str | None = None, by: tuple[str, ...] = ()
+) -> DataFrame:
     """links (from link_score.link_mentions, optionally with a `description`
-    column from the dictionary) → triples(subj, pred, obj, obj_type, lang)."""
+    column from the dictionary) → triples(subj, pred, obj, obj_type, lang).
+
+    `by` names links columns that are carried onto every triple and scope
+    its set semantics: triples are distinct within each `by` group (the
+    incremental path passes ("bucket",) for bucket-local sets)."""
     has_desc = "description" in links.columns
     desc_col = F.col("description") if has_desc else F.lit(None).cast("string")
 
@@ -81,20 +87,22 @@ def extract_triples(links: DataFrame, run_ts: str | None = None) -> DataFrame:
     all_triples = F.concat(with_desc, alt)
 
     out = (
-        links.select(local.alias("subj"), F.explode(all_triples).alias("t"))
+        links.select(*by, local.alias("subj"), F.explode(all_triples).alias("t"))
         .select(
+            *by,
             "subj",
             F.col("t.pred").alias("pred"),
             F.col("t.obj").alias("obj"),
             F.col("t.obj_type").alias("obj_type"),
             F.col("t.lang").alias("lang"),
         )
-        .dropDuplicates(["subj", "pred", "obj"])
+        .dropDuplicates([*by, "subj", "pred", "obj"])
     )
     if run_ts is not None:
         prov = (
-            links.select(local.alias("lsubj"), "class_iri").distinct()
+            links.select(*by, local.alias("lsubj"), "class_iri").distinct()
             .select(
+                *by,
                 F.concat(
                     F.lit(LOCAL_NS),
                     F.lit("alignment_"),

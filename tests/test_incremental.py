@@ -163,3 +163,23 @@ def test_incremental_link_delta_and_dict_invalidation(spark, tmp_path):
         for r in spark.read.parquet(m_out).select("bucket").distinct().collect()
     }
     assert set(r4["changed_buckets"]) == all_buckets
+
+
+def test_incremental_detect_new_pattern_over_unchanged_transcripts(spark, tmp_path):
+    """A pattern added to the dictionary is detected in buckets whose
+    transcripts did not change: the pattern list is part of the marker."""
+    out = str(tmp_path / "mentions")
+    schema = "conv_id string, turn_idx int, text string"
+    tr = spark.createDataFrame(
+        [("cA", 0, "chronic pain after a hash join"), ("cB", 0, "pain")], schema
+    )
+    incremental_detect(spark, tr, ["pain"], out, buckets=BUCKETS)
+    patterns = ["pain", "hash join"]
+    r = incremental_detect(spark, tr, patterns, out, buckets=BUCKETS)
+    assert r["changed_buckets"]
+    want = {
+        (m.conv_id, m.turn_idx, m.begin, m.end, m.pattern)
+        for m in detect_mentions(spark, tr, patterns).collect()
+    }
+    assert "hash join" in {m[4] for m in want}
+    assert _mentions_set(spark, out) == want

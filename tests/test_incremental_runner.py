@@ -4,10 +4,11 @@ delta-proportional stage cost."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ontology_mapper_spark.kg_fixture import terms_df, xrefs_df
-from ontology_mapper_spark.pipeline.incremental_cc import compact_triples
+from ontology_mapper_spark.pipeline.incremental_cc import compact_edges, compact_triples
 from ontology_mapper_spark.pipeline.incremental_runner import run_incremental_batch
 
 BUCKETS = 8
@@ -121,3 +122,116 @@ def test_two_batches_equal_from_scratch(spark, tmp_path):
     assert s3["canonicalize"] == {"skipped": True}
     assert s3["materialize"]["changed_buckets"] == []
     assert s3["edges"]["changed_buckets"] == []
+
+
+def _batch(spark, rows, out, xrefs=None):
+    return run_incremental_batch(
+        spark, spark.createDataFrame(rows, SCHEMA), terms_df(spark), xrefs, out,
+        buckets=BUCKETS, run_ts="2026-01-01",
+    )
+
+
+def _assert_equals_from_scratch(spark, rows, out):
+    from ontology_mapper_spark.pipeline import (
+        build_dictionary,
+        comention_edges,
+        detect_mentions,
+        extract_triples,
+        link_mentions,
+    )
+
+    terms = terms_df(spark)
+    full_l = link_mentions(
+        spark,
+        detect_mentions(
+            spark, spark.createDataFrame(rows, SCHEMA), build_dictionary(terms)
+        ),
+        terms,
+        idf=None,
+    )
+
+    def rows_of(df, cols=None):
+        return {tuple(r) for r in (df.select(*cols) if cols else df).collect()}
+
+    link_cols = ["conv_id", "turn_idx", "begin", "end", "pattern", "class_iri", "rank"]
+    assert rows_of(spark.read.parquet(f"{out}/links"), link_cols) == rows_of(
+        full_l, link_cols
+    )
+    assert rows_of(compact_triples(spark, f"{out}/triples")) == rows_of(
+        extract_triples(full_l, run_ts="2026-01-01")
+    )
+    edge_cols = ["entity_a", "entity_b", "n_comentions"]
+    assert rows_of(compact_edges(spark, f"{out}/edges"), edge_cols) == rows_of(
+        comention_edges(full_l, window_turns=2), edge_cols
+    )
+
+
+def test_nothing_new_batch_runs_no_jobs_after_detect(spark, tmp_path, monkeypatch):
+    """With nothing new, link, materialize and edges decide from the
+    upstream markers alone: no Spark job at all."""
+    from ontology_mapper_spark.pipeline import incremental_runner
+
+    out = str(tmp_path / "inc")
+    _batch(spark, BATCH1 + BATCH2_NEW, out, xrefs_df(spark))
+    sc = spark.sparkContext
+    groups = {}
+
+    def grouped(name, fn):
+        def call(*args, **kwargs):
+            groups[name] = f"test-incremental-{name}"
+            sc.setJobGroup(groups[name], name)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return call
+
+    for name in ("incremental_link", "incremental_materialize", "incremental_edges"):
+        monkeypatch.setattr(
+            incremental_runner, name, grouped(name, getattr(incremental_runner, name))
+        )
+    s = _batch(spark, BATCH1 + BATCH2_NEW, out)
+    assert s["link"]["changed_buckets"] == []
+    assert len(groups) == 3
+    for name, group in groups.items():
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
+@pytest.mark.parametrize("table", ["mentions", "links", "triples", "edges"])
+def test_write_dying_before_marker_recomputes(spark, tmp_path, monkeypatch, table):
+    """A stage whose write lands but whose marker save dies leaves its old
+    marker, so the next batch recomputes those buckets and the outputs
+    equal a from-scratch run."""
+    from ontology_mapper_spark.pipeline import incremental
+
+    out = str(tmp_path / "inc")
+    _batch(spark, BATCH1, out)
+    real_save = incremental._save_marker
+    fired = []
+
+    def dies_once(path, marker):
+        if path.endswith(table) and not fired:
+            fired.append(path)
+            raise OSError("injected marker-save failure")
+        real_save(path, marker)
+
+    monkeypatch.setattr(incremental, "_save_marker", dies_once)
+    with pytest.raises(OSError, match="injected"):
+        _batch(spark, BATCH1 + BATCH2_NEW, out)
+    s = _batch(spark, BATCH1 + BATCH2_NEW, out)
+    stage = {"mentions": "detect", "links": "link", "triples": "materialize",
+             "edges": "edges"}[table]
+    assert s[stage]["changed_buckets"]
+    _assert_equals_from_scratch(spark, BATCH1 + BATCH2_NEW, out)
+
+
+def test_manifest_schema_equals_inferred_schema(spark, tmp_path):
+    from ontology_mapper_spark.catalog import read_manifest, read_table
+
+    out = str(tmp_path / "inc")
+    _batch(spark, BATCH1 + BATCH2_NEW, out, xrefs_df(spark))
+    for table in ("mentions", "links", "triples", "edges", "canonical_labels"):
+        path = f"{out}/{table}"
+        assert read_manifest(path) is not None, table
+        assert read_table(spark, path).schema == spark.read.parquet(path).schema, table
