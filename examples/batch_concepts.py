@@ -38,7 +38,7 @@ def main() -> int:
         F.broadcast(ranked),
         F.lower(F.trim(concepts["label"])) == ranked["pattern"],
         "left",
-    ).select("concept_key", "class_iri", "predicate", "score", "rank")
+    ).select(concepts["concept_key"], "class_iri", "predicate", "score", "rank")
     out.orderBy("concept_key", "rank").show(50, truncate=False)
     return 0
 

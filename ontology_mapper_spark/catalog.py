@@ -7,7 +7,9 @@ difference (SURVEY.md §7.1 step 7 fallback).
 
 from __future__ import annotations
 
+import json
 import os
+import re
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -66,18 +68,39 @@ def write_table(
     """Write parquet + `_manifest.json`; returns the manifest dict.
 
     `row_count` is the number of rows this write produced, taken from an
-    Observation attached to the write job itself (no read-back count).
-    The schema is read back once, so the manifest records what a reader
-    sees: partition columns last, with their inferred types.
+    Observation attached to the write job itself (no read-back count);
+    the schema is `reader_schema`'s, so nothing is read back.
     """
     obs = Observation()
     writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    schema = df.sparkSession.read.parquet(path).schema
     return write_manifest(
-        path, schema, partition_by or [], obs.get["rows"], snapshot_id
+        path,
+        reader_schema(df.schema, partition_by or []),
+        partition_by or [],
+        obs.get["rows"],
+        snapshot_id,
+    )
+
+
+def reader_schema(schema: StructType, partition_by: list[str]) -> StructType:
+    """The schema spark.read.parquet infers for a table written from
+    `schema` partitioned by `partition_by`: every field nullable (parquet
+    stores them so) and the partition columns last, in `partition_by`
+    order. Partition columns keep their written type, so a writer writes
+    them in the type partition discovery infers from their directory
+    names: int for a hash bucket, string for a name."""
+    nullable = re.sub(
+        r'"(nullable|containsNull|valueContainsNull)": false',
+        r'"\1": true',
+        json.dumps(schema.jsonValue()),
+    )
+    fields = {f.name: f for f in StructType.fromJson(json.loads(nullable)).fields}
+    return StructType(
+        [f for name, f in fields.items() if name not in partition_by]
+        + [fields[name] for name in partition_by]
     )
 
 
@@ -91,7 +114,6 @@ def write_manifest(
     """Write the `_manifest.json` read_table reads: `schema` must be the
     one a reader of `path` sees (partition columns last)."""
     import hashlib
-    import json
 
     manifest = {
         "format_version": "parquet-manifest-1",
@@ -117,8 +139,6 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_manifest(path: str) -> dict | None:
-    import json
-
     try:
         with open(os.path.join(path, "_manifest.json")) as fh:
             return json.load(fh)

@@ -1345,16 +1345,16 @@ from . import kg_fixture as _kgf
 
 
 def _kg_fixture_links(spark, sf):
-    from .pipeline import build_dictionary, detect_mentions, link_mentions
+    from .pipeline import Dictionary, detect_mentions
 
     d = _t(spark, sf, "documents").select(
         F.col("doc_id").cast("string").alias("conv_id"),
         F.lit(0).alias("turn_idx"),
         "text",
     )
-    terms = _kgf.terms_df(spark)
-    mentions = detect_mentions(spark, d, build_dictionary(terms))
-    return link_mentions(spark, mentions, terms, idf=None)
+    dictionary = Dictionary(_kgf.terms_df(spark))
+    mentions = detect_mentions(spark, d, dictionary.patterns)
+    return dictionary.link(mentions)
 
 
 @_q(

@@ -17,7 +17,7 @@ extract_triples / canonical_mapping); the oracle side is
 * connected components recomputed with an independent BFS.
 
 Scoring reuses link_score.jaro_winkler/_tfidf_cosine (the same public
-algorithms the Arrow UDF applies); independence of the JW implementation
+algorithms the engine's scorer applies); independence of the JW implementation
 itself is covered by the DuckDB jaro_winkler_similarity property test in
 tests/test_kg_fixture_oracle.py.
 """
@@ -131,10 +131,13 @@ def _round_half_up_micro(x: float) -> int:
     )
 
 
-def decision_rows() -> list[dict]:
+def decision_rows(
+    terms: list[dict] = TERMS, idf: dict[str, float] | None = None
+) -> list[dict]:
     """The rank_dictionary decision table recomputed in plain Python:
-    term_patterns explode → classification → score → URI-priority dedup →
-    per-pattern top-3 rank. Pure function of TERMS."""
+    pattern explode → classification → score → URI-priority dedup →
+    per-pattern top-3 rank. Pure function of `terms` (rows with TERMS'
+    keys) and `idf` (none: every token weighs 1)."""
     from .oracle.semantics import (
         ALIGNMENT_PREDICATE,
         DEFAULT_PREDICATE,
@@ -143,7 +146,7 @@ def decision_rows() -> list[dict]:
     from .pipeline.link_score import _tfidf_cosine, jaro_winkler
 
     pats: dict[tuple, dict] = {}
-    for t in TERMS:
+    for t in terms:
         pats.setdefault(
             (t["label"].strip().lower(), t["term_id"], t["source"], "label"), t
         )
@@ -157,7 +160,7 @@ def decision_rows() -> list[dict]:
         ck = pattern.replace(" ", "_")
         label_n = t["label"].lower().strip()
         score = 0.7 * jaro_winkler(pattern, label_n) + 0.3 * _tfidf_cosine(
-            pattern.split(), label_n.split(), {}
+            pattern.split(), label_n.split(), idf or {}
         )
         rows.append(dict(
             pattern=pattern, term_id=term_id, source=source, match_via=via,

@@ -1,5 +1,5 @@
 from .mention_detect import AhoCorasick, build_dictionary, detect_mentions
-from .link_score import score_candidates, link_mentions
+from .link_score import Dictionary, link_mentions
 from .comention import comention_edges
 from .canonicalize import connected_components, canonical_mapping
 from .materialize import extract_triples
@@ -8,7 +8,7 @@ __all__ = [
     "AhoCorasick",
     "build_dictionary",
     "detect_mentions",
-    "score_candidates",
+    "Dictionary",
     "link_mentions",
     "comention_edges",
     "connected_components",

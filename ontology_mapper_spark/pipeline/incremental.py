@@ -28,15 +28,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import shutil
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..catalog import read_table, write_manifest
+from ..catalog import read_table, reader_schema, write_manifest
+from .link_score import Dictionary
 
 BUCKET_MARKER = "_BUCKET_FINGERPRINTS.json"
 TRANSCRIPT_COLS = ("conv_id", "turn_idx", "text")
@@ -78,22 +77,6 @@ def _save_marker(path: str, marker: dict[str, int]) -> None:
         json.dump(marker, fh)
 
 
-def _reader_schema(schema: StructType) -> StructType:
-    """The schema spark.read.parquet infers for a bucket table written
-    from `schema`: every field nullable (parquet stores them so) and
-    `bucket` an int partition column, last."""
-    nullable = re.sub(
-        r'"(nullable|containsNull|valueContainsNull)": false',
-        r'"\1": true',
-        json.dumps(schema.jsonValue()),
-    )
-    fields = [
-        f for f in StructType.fromJson(json.loads(nullable)).fields
-        if f.name != "bucket"
-    ]
-    return StructType(fields + [StructField("bucket", IntegerType(), True)])
-
-
 def write_buckets(
     df: DataFrame | None, path: str, replace: list[int], marker: dict[str, int]
 ) -> int:
@@ -125,7 +108,7 @@ def write_buckets(
             shutil.move(src, dst)
     shutil.rmtree(staging, ignore_errors=True)
     if df is not None:
-        write_manifest(path, _reader_schema(df.schema), ["bucket"], rows)
+        write_manifest(path, reader_schema(df.schema, ["bucket"]), ["bucket"], rows)
     _save_marker(path, marker)
     return rows
 
@@ -189,26 +172,23 @@ def incremental_detect(
 def incremental_link(
     spark: SparkSession,
     mentions_path: str,
-    terms: DataFrame,
+    terms: DataFrame | Dictionary,
     out_path: str,
     dict_version: str = "v1",
 ) -> dict:
     """Link the mention buckets whose detect marker changed since the last
     link run (or all, when `dict_version` changes: a new snapshot
-    invalidates every bucket).
+    invalidates every bucket). `terms` is the terms table or its
+    Dictionary, collected only if some bucket changed.
 
     The link itself stays the broadcast decision-table join (zero
     shuffle). The mentions' own `bucket` column is kept verbatim, so
     partition alignment with the detect stage is structural.
     """
-    from .link_score import rank_dictionary
+    dictionary = terms if isinstance(terms, Dictionary) else Dictionary(terms)
 
     def build(changed: list[int]) -> DataFrame:
-        ranked = F.broadcast(rank_dictionary(spark, terms, idf=None))
-        return (
-            read_table(spark, mentions_path)
-            .where(F.col("bucket").isin(changed))
-            .join(ranked, "pattern", "inner")
-        )
+        mentions = read_table(spark, mentions_path)
+        return dictionary.link(mentions.where(F.col("bucket").isin(changed)))
 
     return refresh_buckets(out_path, load_marker(mentions_path), dict_version, build)

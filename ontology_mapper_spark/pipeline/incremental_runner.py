@@ -62,19 +62,21 @@ def run_incremental_batch(
     edges (None/empty when the snapshot didn't change). Returns per-stage
     delta summaries."""
     from .canonicalize import LOCAL_CC_THRESHOLD, connected_components
-    from .mention_detect import build_dictionary
+    from .link_score import Dictionary
 
     os.makedirs(out_dir, exist_ok=True)
     m_path = os.path.join(out_dir, "mentions")
     l_path = os.path.join(out_dir, "links")
     c_path = os.path.join(out_dir, "canonical_labels")
 
+    # one terms collect per batch: detect's patterns and link's table
+    dictionary = Dictionary(terms)
     summary: dict = {}
     summary["detect"] = incremental_detect(
-        spark, transcripts, build_dictionary(terms), m_path, buckets=buckets
+        spark, transcripts, dictionary.patterns, m_path, buckets=buckets
     )
     summary["link"] = incremental_link(
-        spark, m_path, terms, l_path, dict_version=dict_version
+        spark, m_path, dictionary, l_path, dict_version=dict_version
     )
 
     if xref_delta is None:

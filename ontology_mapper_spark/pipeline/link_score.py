@@ -1,35 +1,51 @@
 """Stage 2 — entity-link scoring: mention → ontology-class candidates.
 
 Candidate generation is an equi-join of detected mentions against the
-exploded (pattern → term) dictionary — the dictionary side is small by
-design and explicitly ``broadcast()``, so at 10^12-turn scale this stage is
-a map-side join with NO shuffle of the mention table.
+per-pattern decision table — the dictionary side is small by design and
+explicitly ``broadcast()``, so at 10^12-turn scale this stage is a
+map-side join with NO shuffle of the mention table.
 
-Scoring reproduces the reference's two-layer semantics:
+Every decision the reference makes per candidate is a pure function of
+(pattern, term), never of the individual mention, so the whole table is
+computed once on the driver (the dictionary plane, `Dictionary`) from ONE
+collect of the terms table, and handed to Spark as a small local
+DataFrame. No window, pandas UDF or shuffle runs for it:
 
-1. the *class* decision — ``determine_alignment_type``
-   (/root/reference/utils/helpers.py:76-105) — runs as the native
-   when/otherwise chain in functions/align.py (JVM-side, codegen);
-2. a *numeric* rescore (Jaro-Winkler on normalized strings + TF-IDF cosine
-   over dictionary tokens) runs as an Arrow-vectorized pandas UDF — the
-   only Python in the stage, and batch-wise, never per-row-over-Spark
-   (BASELINE.json:input_hint forbids per-row Python UDFs).
+1. the *class* decision — the reference's ``determine_alignment_type``
+   (utils/helpers.py:76-105) — is oracle.semantics.alignment_type, whose
+   parity with the native functions/align.py chain is tested;
+2. the *numeric* score is 0.7·Jaro-Winkler on normalized strings + 0.3·
+   TF-IDF cosine over dictionary tokens (`pair_score`);
+3. priority dedup (same URI from both service sources: bioportal wins, OLS
+   survivor flagged ols_only) mirrors core/lookup.py:68-87 with a total
+   order — not first-seen, whose winner would depend on input order.
 
-Priority dedup (same URI from both service sources: bioportal wins, OLS
-survivor flagged ols_only) mirrors core/lookup.py:68-87 as a deterministic
-window rank — not dropDuplicates, whose winner is partition-order-dependent.
+The same collect gives mention detection its pattern list and the IDF.
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import re
+from collections import Counter, defaultdict
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.align import alignment_predicate_col, alignment_type_col
+from ..oracle.semantics import ALIGNMENT_PREDICATE, DEFAULT_PREDICATE, alignment_type
+
+TERM_COLS = ("term_id", "class_iri", "ontology", "label", "synonyms", "source")
+
+DECISION_SCHEMA = (
+    "pattern string, term_id string, class_iri string, ontology string, "
+    "label string, synonyms array<string>, source string, match_via string, "
+    "concept_key string, alignment string, predicate string, score double, "
+    "ols_only boolean, rank int"
+)
+
+# Java's \s, which Spark's split(x, '\\s+') splits on: ASCII whitespace only
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def jaro_winkler(s1: str, s2: str) -> float:
@@ -84,7 +100,10 @@ def jaro_winkler(s1: str, s2: str) -> float:
 
 
 def _tfidf_cosine(tokens_a: list[str], tokens_b: list[str], idf: dict[str, float]) -> float:
-    """Cosine of IDF-weighted token multisets (df from the dictionary side)."""
+    """Cosine of IDF-weighted token multisets (df from the dictionary side).
+
+    The sums are exactly rounded (math.fsum), so the result does not depend
+    on the iteration order of the token set, which follows PYTHONHASHSEED."""
     if not tokens_a or not tokens_b:
         return 0.0
     wa: dict[str, float] = {}
@@ -93,68 +112,137 @@ def _tfidf_cosine(tokens_a: list[str], tokens_b: list[str], idf: dict[str, float
         wa[t] = wa.get(t, 0.0) + idf.get(t, 1.0)
     for t in tokens_b:
         wb[t] = wb.get(t, 0.0) + idf.get(t, 1.0)
-    dot = sum(wa[t] * wb[t] for t in wa.keys() & wb.keys())
-    na = math.sqrt(sum(v * v for v in wa.values()))
-    nb = math.sqrt(sum(v * v for v in wb.values()))
+    dot = math.fsum(wa[t] * wb[t] for t in wa.keys() & wb.keys())
+    na = math.sqrt(math.fsum(v * v for v in wa.values()))
+    nb = math.sqrt(math.fsum(v * v for v in wb.values()))
     return dot / (na * nb) if na and nb else 0.0
 
 
+def _norm(s: str | None) -> str | None:
+    """Spark's lower(trim(s)): trim strips only ' ' (the comparator's
+    lower().strip(), services/comparator.py:27-28)."""
+    return None if s is None else s.strip(" ").lower()
+
+
+def _asc(s: str | None) -> tuple:
+    """Sort key of a Spark ascending order: nulls first, then code points
+    (Python's str order is Spark's UTF-8 byte order)."""
+    return (s is not None, s or "")
+
+
+def pair_score(surface: str | None, label: str | None, idf: dict[str, float]) -> float:
+    """0.7·JaroWinkler + 0.3·TFIDF-cosine of (surface, label), both
+    lower().strip()-ed and split on whitespace."""
+    s_n = (surface or "").lower().strip()
+    l_n = (label or "").lower().strip()
+    return 0.7 * jaro_winkler(s_n, l_n) + 0.3 * _tfidf_cosine(
+        s_n.split(), l_n.split(), idf
+    )
+
+
+class Dictionary:
+    """The dictionary plane of a terms table: the pattern list detection
+    takes, the IDF, and the per-pattern decision table, all computed on
+    the driver from one collect of the terms (its only Spark job, run on
+    first use)."""
+
+    def __init__(self, terms_df: DataFrame) -> None:
+        self.terms_df = terms_df
+
+    @functools.cached_property
+    def terms(self) -> list[tuple]:
+        """One (term_id, class_iri, ontology, label, synonyms, source) per
+        term row; a column the table lacks reads as null (the pattern
+        list needs only label and synonyms, the IDF only label)."""
+        have = set(self.terms_df.columns)
+        cols = [c if c in have else F.lit(None).alias(c) for c in TERM_COLS]
+        return [tuple(r) for r in self.terms_df.select(*cols).collect()]
+
+    @functools.cached_property
+    def patterns(self) -> list[str]:
+        """Sorted distinct normalized labels and synonyms; the reference's
+        quality filter (utils/helpers.py:58-60) drops forms under 3 chars."""
+        forms = {
+            _norm(s)
+            for t in self.terms
+            for s in [t[3], *(t[4] or [])]
+            if s is not None
+        }
+        return sorted(p for p in forms if len(p) >= 3)
+
+    @functools.cached_property
+    def idf(self) -> dict[str, float]:
+        """IDF over label tokens: df counts token occurrences over all
+        labels, n the term rows."""
+        df = Counter(
+            tok
+            for t in self.terms
+            if t[3] is not None
+            for tok in _JAVA_WS.split(_norm(t[3]))
+            if tok
+        )
+        n = max(len(self.terms), 1)
+        return {tok: math.log((1 + n) / (1 + c)) + 1.0 for tok, c in df.items()}
+
+    def decisions(self, idf: dict[str, float] | None = None, top_k: int = 3) -> list[tuple]:
+        """The decision table's rows, in DECISION_SCHEMA order: every
+        (pattern, term) candidate — each label, and each synonym of ≥3
+        chars — deduped per (pattern, class_iri) to one URI (bioportal
+        first, then term_id, match_via), classified, scored, and ranked
+        per pattern by score desc, then class_iri; rank ≤ top_k kept."""
+        idf = idf or {}
+        cands: dict[tuple, tuple] = {}
+        for t in self.terms:
+            forms = [(_norm(t[3]), "label")] + [
+                (p, "synonym")
+                for p in map(_norm, t[4] or [])
+                if p is not None and len(p) >= 3
+            ]
+            for pattern, via in forms:
+                cands.setdefault((pattern, t[0], t[5], via), t)
+
+        best: dict[tuple, tuple] = {}
+        for (pattern, term_id, source, via), t in cands.items():
+            order = (source != "bioportal", _asc(term_id), via)
+            key = (pattern, t[1])
+            if key not in best or order < best[key][0]:
+                best[key] = (order, pattern, via, t)
+
+        by_pattern: dict[str | None, list[tuple]] = defaultdict(list)
+        for _, pattern, via, t in best.values():
+            label, synonyms, source = t[3], t[4], t[5]
+            ck = None if pattern is None else pattern.replace(" ", "_")
+            # a null key is 'related', as Spark's null comparisons make it
+            alignment = "related" if ck is None else alignment_type(label, synonyms, ck)
+            by_pattern[pattern].append((
+                pattern, *t, via, ck, alignment,
+                ALIGNMENT_PREDICATE.get(alignment, DEFAULT_PREDICATE),
+                pair_score(pattern, label, idf),
+                None if source is None else source == "ols",
+            ))
+        rows = []
+        for cands_of in by_pattern.values():
+            cands_of.sort(key=lambda r: (-r[11], _asc(r[2])))
+            rows += [(*r, rank) for rank, r in enumerate(cands_of[:top_k], 1)]
+        return rows
+
+    def table(self, idf: dict[str, float] | None = None, top_k: int = 3) -> DataFrame:
+        """`decisions` as a small local DataFrame."""
+        return self.terms_df.sparkSession.createDataFrame(
+            self.decisions(idf, top_k), DECISION_SCHEMA
+        )
+
+    def link(
+        self, mentions: DataFrame, idf: dict[str, float] | None = None, top_k: int = 3
+    ) -> DataFrame:
+        """`mentions` joined to the decision table: one broadcast hash join,
+        map-only over the mentions."""
+        return mentions.join(F.broadcast(self.table(idf, top_k)), "pattern", "inner")
+
+
 def dictionary_idf(terms_df: DataFrame) -> dict[str, float]:
-    """IDF over label tokens of the term dictionary (small; driver-collected)."""
-    df = (
-        terms_df.select(F.explode(F.split(F.lower(F.trim("label")), r"\s+")).alias("tok"))
-        .where(F.length("tok") > 0)
-        .groupBy("tok")
-        .agg(F.count("*").alias("df"))
-    )
-    n = max(terms_df.count(), 1)
-    return {
-        r["tok"]: math.log((1 + n) / (1 + r["df"])) + 1.0 for r in df.collect()
-    }
-
-
-def term_patterns(terms_df: DataFrame) -> DataFrame:
-    """Explode the dictionary to (pattern, term_id, class_iri, ontology,
-    label, synonyms, source, match_via). Pattern normalization = the
-    comparator's lower().strip() (services/comparator.py:27-28); synonym
-    quality filter = utils/helpers.py:58-60 (≥3 chars, non-blank)."""
-    base_cols = ["term_id", "class_iri", "ontology", "label", "synonyms", "source"]
-    labels = terms_df.select(
-        F.lower(F.trim("label")).alias("pattern"), *base_cols
-    ).withColumn("match_via", F.lit("label"))
-    syns = (
-        terms_df.select(F.explode("synonyms").alias("syn"), *base_cols)
-        .select(F.lower(F.trim("syn")).alias("pattern"), *base_cols)
-        .where(F.length("pattern") >= 3)
-        .withColumn("match_via", F.lit("synonym"))
-    )
-    return labels.unionByName(syns).dropDuplicates(["pattern", "term_id", "source", "match_via"])
-
-
-def score_candidates(
-    spark: SparkSession,
-    candidates: DataFrame,
-    idf: dict[str, float],
-    surface_col: str = "pattern",
-    label_col: str = "label",
-) -> DataFrame:
-    """Append a numeric `score` column: 0.7·JaroWinkler + 0.3·TFIDF-cosine,
-    computed in one Arrow-vectorized pandas UDF over (surface, label)."""
-    bc_idf = spark.sparkContext.broadcast(idf)
-
-    @F.pandas_udf(T.DoubleType())
-    def pair_score(surface: pd.Series, label: pd.Series) -> pd.Series:
-        idf_map = bc_idf.value
-        out = []
-        for s, l in zip(surface.tolist(), label.tolist()):
-            s_n = (s or "").lower().strip()
-            l_n = (l or "").lower().strip()
-            jw = jaro_winkler(s_n, l_n)
-            cos = _tfidf_cosine(s_n.split(), l_n.split(), idf_map)
-            out.append(0.7 * jw + 0.3 * cos)
-        return pd.Series(out)
-
-    return candidates.withColumn("score", pair_score(F.col(surface_col), F.col(label_col)))
+    """IDF over label tokens of the term dictionary (Dictionary.idf)."""
+    return Dictionary(terms_df).idf
 
 
 def rank_dictionary(
@@ -164,49 +252,20 @@ def rank_dictionary(
     top_k: int = 3,
 ) -> DataFrame:
     """Precomputed per-pattern decision table: classification, score,
-    URI-priority dedup, and top-k rank for every dictionary pattern.
+    URI-priority dedup, and top-k rank for every dictionary pattern
+    (Dictionary.decisions, built on the driver; no window or UDF runs).
 
     THE scale insight of this stage: every per-candidate decision the
     reference makes — determine_alignment_type (utils/helpers.py:76-105),
     URI-priority dedup (core/lookup.py:68-87), score-ranked top-k
     (core/lookup.py:63-66) — is a pure function of (pattern, term), never
     of the individual mention (a matched span lowercased IS its pattern).
-    So all of it runs once over the dictionary-sized pattern table (window
-    functions and the Arrow-batched scorer touch ~1e3 rows), and the
-    10^12-turn mention table only ever sees a broadcast hash join: zero
-    shuffles, zero Python in the per-turn path.
+    So all of it runs once over the dictionary-sized pattern table, and
+    the 10^12-turn mention table only ever sees a broadcast hash join:
+    zero shuffles, zero Python in the per-turn path. `spark` is the
+    session of `terms_df`.
     """
-    cand = term_patterns(terms_df)
-    cand = cand.withColumn("concept_key", F.translate("pattern", " ", "_"))
-    cand = cand.withColumn(
-        "alignment",
-        alignment_type_col(F.col("label"), F.col("synonyms"), F.col("concept_key")),
-    ).withColumn(
-        "predicate",
-        alignment_predicate_col(F.col("label"), F.col("synonyms"), F.col("concept_key")),
-    )
-    cand = score_candidates(spark, cand, idf or {})
-
-    # URI-priority dedup per (pattern, class): bioportal wins over OLS,
-    # then stable tiebreaks (core/lookup.py:68-87 first-seen semantics).
-    w_uri = Window.partitionBy("pattern", "class_iri").orderBy(
-        F.when(F.col("source") == "bioportal", 0).otherwise(1),
-        F.col("term_id"),
-        F.col("match_via"),
-    )
-    deduped = (
-        cand.withColumn("_r", F.row_number().over(w_uri))
-        .where(F.col("_r") == 1)
-        .drop("_r")
-        .withColumn("ols_only", F.col("source") == "ols")
-    )
-    w_rank = Window.partitionBy("pattern").orderBy(
-        F.col("score").desc(), F.col("class_iri")
-    )
-    return (
-        deduped.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= top_k)
-    )
+    return Dictionary(terms_df).table(idf, top_k)
 
 
 def link_mentions(
@@ -222,9 +281,8 @@ def link_mentions(
     decision table — map-only over the mention table (see rank_dictionary
     docstring for why this is exact, not an approximation).
 
-    Output: (conv_id, turn_idx, begin, end, surface, pattern, term_id,
+    Output: (pattern, conv_id, turn_idx, begin, end, surface, term_id,
     class_iri, ontology, label, synonyms, source, match_via, concept_key,
     alignment, predicate, score, ols_only, rank).
     """
-    ranked = rank_dictionary(spark, terms_df, idf, top_k)
-    return mentions.join(F.broadcast(ranked), "pattern", "inner")
+    return Dictionary(terms_df).link(mentions, idf, top_k)

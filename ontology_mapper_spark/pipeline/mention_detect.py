@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .link_score import Dictionary
+
 
 class AhoCorasick:
     """Multi-pattern string matcher (classic Aho-Corasick, dict-of-dicts).
@@ -100,24 +102,13 @@ class AhoCorasick:
 
 
 def build_dictionary(terms_df: DataFrame) -> list[str]:
-    """Distinct normalized patterns (labels + quality-filtered synonyms).
+    """Distinct normalized patterns (labels + quality-filtered synonyms),
+    sorted: link_score.Dictionary's pattern list, from one terms collect.
 
-    Synonym quality filter matches the reference (utils/helpers.py:58-60):
-    blank and <3-char forms are dropped. Runs as a Spark job (distinct is a
-    shuffle over the SMALL dictionary table, then a driver collect of the
-    distinct pattern strings only — not the full table).
+    The synonym quality filter matches the reference
+    (utils/helpers.py:58-60): blank and <3-char forms are dropped.
     """
-    pats = (
-        terms_df.select(F.lower(F.trim(F.col("label"))).alias("p"))
-        .unionByName(
-            terms_df.select(
-                F.explode_outer("synonyms").alias("s")
-            ).select(F.lower(F.trim(F.col("s"))).alias("p"))
-        )
-        .where((F.col("p").isNotNull()) & (F.length("p") >= 3))
-        .distinct()
-    )
-    return sorted(r["p"] for r in pats.collect())
+    return Dictionary(terms_df).patterns
 
 
 _SIMPLE_RE = __import__("re").compile(r"^[a-z0-9]+( [a-z0-9]+)*$")

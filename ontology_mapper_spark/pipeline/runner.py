@@ -20,8 +20,11 @@ Every table the runner owns (the four stages, plus `snapshot_xrefs`,
 `edges` and `nodes`, which ride on their parent stage's fingerprint and
 event) is written by catalog.write_table and read by catalog.read_table —
 catalog.py is the only seam to swap for an Iceberg catalog on a real
-cluster. Mentions/links are written partitioned by a conv_id hash bucket
-so downstream stages and incremental re-runs prune by bucket. At the end
+cluster. Mentions/links are written partitioned by an int conv_id hash
+bucket so downstream stages and incremental re-runs prune by bucket.
+Detect's pattern list and link's decision table come from one
+link_score.Dictionary per run, whose single terms collect runs only if
+one of the two stages does. At the end
 of `run()` one driver-side parquet file lands under `_metrics`: a row per
 stage that ran (stage, n_rows, wall_s, run_ts, code_version), with n_rows
 the row count observed on the stage's write — no Spark job of its own.
@@ -40,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from .incremental import bucket_of
+from .link_score import Dictionary
 
 CODE_VERSION = "r1.0"  # bump to invalidate all stage caches
 
@@ -184,14 +189,12 @@ class PipelineRunner:
                 self.spark, n_convs=self.n_convs, seed=self.seed,
                 mention_labels=labels,
             )
-            return df.withColumn(
-                "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.buckets))
-            )
+            return df.withColumn("bucket", bucket_of("conv_id", self.buckets))
 
         return self._table("transcripts", fp, build, partition_by=["bucket"])
 
-    def mention_detect(self, terms: DataFrame, transcripts: DataFrame) -> DataFrame:
-        from .mention_detect import build_dictionary, detect_mentions
+    def mention_detect(self, dictionary: Dictionary, transcripts: DataFrame) -> DataFrame:
+        from .mention_detect import detect_mentions
 
         fp = _fingerprint(
             CODE_VERSION, "mention_detect",
@@ -200,17 +203,12 @@ class PipelineRunner:
         )
 
         def build() -> DataFrame:
-            pats = build_dictionary(terms)
-            m = detect_mentions(self.spark, transcripts, pats)
-            return m.withColumn(
-                "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.buckets))
-            )
+            m = detect_mentions(self.spark, transcripts, dictionary.patterns)
+            return m.withColumn("bucket", bucket_of("conv_id", self.buckets))
 
         return self._table("mention_detect", fp, build, partition_by=["bucket"])
 
-    def link_score(self, terms: DataFrame, mentions: DataFrame) -> DataFrame:
-        from .link_score import dictionary_idf, link_mentions
-
+    def link_score(self, dictionary: Dictionary, mentions: DataFrame) -> DataFrame:
         fp = _fingerprint(
             CODE_VERSION, "link_score",
             _committed(self._stage_dir("snapshot")) or "",
@@ -218,11 +216,8 @@ class PipelineRunner:
         )
 
         def build() -> DataFrame:
-            idf = dictionary_idf(terms)
-            links = link_mentions(self.spark, mentions.drop("bucket"), terms, idf)
-            return links.withColumn(
-                "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.buckets))
-            )
+            links = dictionary.link(mentions.drop("bucket"), dictionary.idf)
+            return links.withColumn("bucket", bucket_of("conv_id", self.buckets))
 
         return self._table("link_score", fp, build, partition_by=["bucket"])
 
@@ -283,11 +278,13 @@ class PipelineRunner:
         wanted = set(stages or STAGES)
         terms, xrefs = self.snapshot()
         tr = self.transcripts()
+        # collected by the first stage that runs and needs it, once
+        dictionary = Dictionary(terms)
         mentions = (
-            self.mention_detect(terms, tr) if "mention_detect" in wanted else None
+            self.mention_detect(dictionary, tr) if "mention_detect" in wanted else None
         )
         links = (
-            self.link_score(terms, mentions)
+            self.link_score(dictionary, mentions)
             if "link_score" in wanted and mentions is not None
             else None
         )

@@ -83,12 +83,11 @@ def stream_link_mentions(
     broadcast join, so exactly the batch per-turn path (map-only, zero
     stream-side shuffle, no state store) running continuously. ts is
     carried through for downstream watermarking."""
-    from ..pipeline.link_score import rank_dictionary
-    from ..pipeline.mention_detect import build_dictionary
+    from ..pipeline.link_score import Dictionary
 
-    mentions = stream_detect_mentions(spark, stream, build_dictionary(terms))
-    ranked = F.broadcast(rank_dictionary(spark, terms, idf=None))
-    return mentions.join(ranked, "pattern", "inner")
+    dictionary = Dictionary(terms)
+    mentions = stream_detect_mentions(spark, stream, dictionary.patterns)
+    return dictionary.link(mentions)
 
 
 def stream_exact_dedup(

@@ -133,3 +133,18 @@ def test_edges_nodes_follow_link_score(spark, tmp_path):
     again = mtimes()
     assert all(again[t] > first[t] for t in first)
     assert spark.read.parquet(f"{out}/nodes").count() > 0
+
+
+def test_manifest_schema_equals_inferred_schema(spark, tmp_path):
+    """Every runner table's manifest holds the schema a reader infers, so
+    catalog.read_table needs no read-back."""
+    from ontology_mapper_spark.catalog import read_manifest, read_table
+
+    out = str(tmp_path / "kg")
+    PipelineRunner(spark, out, n_convs=20, n_terms=30, resume=False).run()
+    tables = ("snapshot", "snapshot_xrefs", "transcripts", "mention_detect",
+              "link_score", "canonicalize", "materialize", "edges", "nodes")
+    for table in tables:
+        path = f"{out}/{table}"
+        assert read_manifest(path) is not None, table
+        assert read_table(spark, path).schema == spark.read.parquet(path).schema, table
