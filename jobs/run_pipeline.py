@@ -6,8 +6,11 @@
 
 Local sandbox:
 
-    python jobs/run_pipeline.py --sf-dir /root/testdata/sf0.001 --out /tmp/kgout
-    python jobs/run_pipeline.py --sf-dir /root/testdata/sf0.001 --out /tmp/kgout --resume
+    python jobs/run_pipeline.py --out /tmp/kgout
+    python jobs/run_pipeline.py --out /tmp/kgout --resume
+
+The snapshot and the transcripts are synthetic, generated from --seed,
+--n-terms and --n-convs.
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True)
-    ap.add_argument("--sf-dir", default=None)
     ap.add_argument("--stage", default="all",
                     help="comma list of stages or 'all'")
     ap.add_argument("--resume", action="store_true")
@@ -73,7 +75,6 @@ def main() -> int:
     runner = PipelineRunner(
         spark,
         out_dir=args.out,
-        sf_dir=args.sf_dir,
         n_convs=args.n_convs,
         n_terms=args.n_terms,
         seed=args.seed,

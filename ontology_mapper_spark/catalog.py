@@ -1,4 +1,5 @@
-"""Table catalog: load the driver's parquet tables and register views.
+"""Table catalog: load the driver's parquet tables; write and read the
+engine's own tables with a manifest.
 
 At sandbox scale these are plain parquet files; at cluster scale the same
 names would be Iceberg tables — the loader is the only code that knows the
@@ -15,35 +16,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    tables = load_all(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
 
 
 # ---------------------------------------------------------------------------
@@ -63,16 +38,16 @@ def write_table(
     path: str,
     partition_by: list[str] | None = None,
     snapshot_id: str | None = None,
-    mode: str = "overwrite",
 ) -> dict:
-    """Write parquet + `_manifest.json`; returns the manifest dict.
+    """Overwrite `path` with parquet + `_manifest.json`; returns the
+    manifest dict.
 
-    `row_count` is the number of rows this write produced, taken from an
-    Observation attached to the write job itself (no read-back count);
-    the schema is `reader_schema`'s, so nothing is read back.
+    `row_count` is taken from an Observation attached to the write job
+    itself (no read-back count); the schema is `reader_schema`'s, so
+    nothing is read back.
     """
     obs = Observation()
-    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

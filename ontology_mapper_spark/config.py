@@ -46,9 +46,3 @@ DOMAIN_COMBINATIONS: dict[str, str] = {
     "Clinical": "SNOMEDCT,ICD10,ICD11,LOINC,CPT",
     "General Medical": "NCIT,HP,MONDO,MESH",
 }
-
-
-def catalog_df(spark):
-    return spark.createDataFrame(
-        [(k, v) for k, v in ONTOLOGY_CATALOG.items()], ["ontology", "description"]
-    )

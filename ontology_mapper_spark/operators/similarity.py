@@ -117,21 +117,6 @@ def _bucket_from_signs(mv, signs_list: list[list[int]]):
     )
 
 
-def lsh_bucket_col(vec, dim: int, n_planes: int = 8):
-    """Random-hyperplane LSH bucket id (int in [0, 2^n_planes)).
-
-    Sign of <v, h_p> computed as a SIGNED-INTEGER sum over the micro-fixed-
-    point vector with a literal ±1 plane array — exact, deterministic under
-    any parallelism, and bit-reproducible by the DuckDB oracle.
-
-    Hot-path note: this convenience form embeds micro_vec_col inside the
-    per-plane fold, so the micro conversion re-evaluates once per plane
-    (higher-order lambdas re-run their body per element). For repeated
-    use project the micro vector once and call lsh_table_buckets_col with
-    pre_micro=True, as lsh_topk does."""
-    return _bucket_from_signs(micro_vec_col(vec), plane_signs(n_planes, dim))
-
-
 def lsh_table_buckets_col(vec, dim: int, n_planes: int, n_tables: int,
                           pre_micro: bool = False):
     """array<struct<table_id,bucket>> — one bucket per LSH table; table t

@@ -56,14 +56,6 @@ def clean_description(text: str | None) -> str:
     return out
 
 
-def norm_label(s: str | None) -> str:
-    """Case/space normalization used for compare & cache keys.
-
-    Mirrors services/comparator.py:27-28 and utils/helpers.py:52.
-    """
-    return (s or "").lower().strip()
-
-
 def dedupe_synonyms(synonyms: list[str] | None, existing_labels: set[str]) -> list[str]:
     """Order-sensitive synonym dedup + quality filter + (len, lower) sort.
 
@@ -314,11 +306,6 @@ def search_strategy(key: str, label: str) -> dict[str, Any]:
     return SEARCH_STRATEGIES.get(
         key, {"variants": [label, label.lower()], "ontologies": "MONDO,HP,NCIT"}
     )
-
-
-# Relationship default tagging (cli/interface.py:556 and :431).
-def default_relationship(category: str) -> str:
-    return "owl:sameAs" if category == "instance" else "rdfs:seeAlso"
 
 
 # ---------------------------------------------------------------------------

@@ -112,8 +112,10 @@ def connected_components(
         ).where(F.col("u") != F.col("v"))
         # one bounded action decides AND fetches: collect threshold+1 rows;
         # if the limit was hit the graph is "big" and we fall through to
-        # the distributed loop (the wasted fetch is capped by the threshold)
-        rows = pairs_df.limit(local_threshold + 1).collect()
+        # the distributed loop (the wasted fetch is capped by the threshold).
+        # coalesce(1) makes it one job: CollectLimit over several partitions
+        # scans the first one in a job of its own before the rest.
+        rows = pairs_df.coalesce(1).limit(local_threshold + 1).collect()
         if len(rows) <= local_threshold:
             labels = local_components((r["u"], r["v"]) for r in rows)
             if stats is not None:

@@ -20,10 +20,16 @@ from pyspark.sql import functions as F
 
 
 def comention_edges(links: DataFrame, window_turns: int = 2,
-                    entity_col: str = "class_iri") -> DataFrame:
-    """(entity_a, entity_b, n_comentions) for pairs within `window_turns`."""
+                    entity_col: str = "class_iri",
+                    by: tuple[str, ...] = ()) -> DataFrame:
+    """(*by, entity_a, entity_b, n_comentions) for pairs within `window_turns`.
+
+    `by` names links columns constant within a conversation (e.g. its
+    hash bucket); they are carried onto every edge and scope its count,
+    which is then a partial count per `by` group.
+    """
     ments = (
-        links.select("conv_id", "turn_idx", F.col(entity_col).alias("entity"))
+        links.select(*by, "conv_id", "turn_idx", F.col(entity_col).alias("entity"))
         .distinct()
     )
     a = ments.alias("a")
@@ -41,11 +47,12 @@ def comention_edges(links: DataFrame, window_turns: int = 2,
             & (F.col("a.entity") < F.col("b.entity")),
         )
         .select(
+            *[F.col(f"a.{c}").alias(c) for c in by],
             F.col("a.entity").alias("entity_a"),
             F.col("b.entity").alias("entity_b"),
         )
     )
-    return pairs.groupBy("entity_a", "entity_b").agg(
+    return pairs.groupBy(*by, "entity_a", "entity_b").agg(
         F.count("*").alias("n_comentions")
     )
 

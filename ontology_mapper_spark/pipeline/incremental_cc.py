@@ -13,12 +13,17 @@ delta batch costs:
    map-side scan, never a shuffle of the full table);
 2. solve CC over the contracted delta edge set on the driver (delta-sized
    — thousands of rows even when 10^12 labels exist);
-3. broadcast the old→new component remap back over the label table and
+3. apply the old→new component remap over the label table and
    rewrite ONLY the buckets containing a remapped row or a brand-new node
    (a staged bucket swap: the rewrite reads the buckets it replaces).
 
 Result is bit-identical to a full recompute (the min-id argument; asserted
 in tests), at delta-proportional cost.
+
+Triples and co-mention edges of the changed link buckets come from the
+batch `extract_triples` and `comention_edges`, each scoped by
+`by=("bucket",)`; `compact_triples` and `compact_edges` merge the buckets
+at read.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import read_table
+from . import comention
 from .canonicalize import local_components
 from .incremental import (
     bucket_fingerprints,
@@ -135,9 +141,8 @@ def incremental_components(
 
     # 3. changed buckets (a remapped component or a new node) and their
     # rewrite, which reads the buckets it replaces
-    remap_df = spark.createDataFrame(
-        remap_rows, "component string, _new_component string"
-    )
+    # the remap is delta-sized, so it rides in the plan as a literal map
+    remap = F.create_map(*[F.lit(c) for row in remap_rows for c in row])
     new_df = spark.createDataFrame(
         new_nodes, "node string, component string"
     ).withColumn("bucket", bucket_of("node", buckets))
@@ -152,10 +157,9 @@ def incremental_components(
     result["changed_buckets"] = changed
     updated = (
         labels.where(F.col("bucket").isin(changed))
-        .join(F.broadcast(remap_df), "component", "left")
         .select(
             "node",
-            F.coalesce("_new_component", "component").alias("component"),
+            F.coalesce(remap[F.col("component")], "component").alias("component"),
             "bucket",
         )
         .unionByName(new_df)
@@ -199,38 +203,17 @@ def incremental_edges(
     """Co-mention edges for the link buckets whose link marker (or
     `window_turns`) changed.
 
-    The co-mention self-join is conversation-local and bucket = hash of
-    conv_id, so per-bucket PARTIAL edge counts are exact; only the final
-    per-(a, b) sum crosses buckets, which `compact_edges` performs at read
-    (sum is algebraic, so bucket-partial + compact == full recompute).
+    The batch `comention_edges` with `by=("bucket",)`: its self-join is
+    conversation-local and bucket = hash of conv_id, so per-bucket PARTIAL
+    edge counts are exact; only the final per-(a, b) sum crosses buckets,
+    which `compact_edges` performs at read (sum is algebraic, so
+    bucket-partial + compact == full recompute).
     """
 
     def build(changed: list[int]) -> DataFrame:
-        ments = (
-            read_table(spark, links_path)
-            .where(F.col("bucket").isin(changed))
-            .select(
-                "bucket", "conv_id", "turn_idx", F.col("class_iri").alias("entity")
-            )
-            .distinct()
-        )
-        a = ments.alias("a")
-        b_ = ments.alias("b")
-        return (
-            a.join(
-                b_,
-                (F.col("a.conv_id") == F.col("b.conv_id"))
-                & (F.col("b.turn_idx") >= F.col("a.turn_idx") - window_turns)
-                & (F.col("b.turn_idx") <= F.col("a.turn_idx") + window_turns)
-                & (F.col("a.entity") < F.col("b.entity")),
-            )
-            .groupBy(
-                F.col("a.bucket").alias("bucket"),
-                F.col("a.entity").alias("entity_a"),
-                F.col("b.entity").alias("entity_b"),
-            )
-            .agg(F.count("*").alias("n_comentions"))
-        )
+        links = read_table(spark, links_path).where(F.col("bucket").isin(changed))
+        # looked up at call time, so a wrapper set on the module sees it
+        return comention.comention_edges(links, window_turns, by=("bucket",))
 
     return refresh_buckets(out_path, load_marker(links_path), window_turns, build)
 

@@ -20,8 +20,9 @@ Every table the runner owns (the four stages, plus `snapshot_xrefs`,
 `edges` and `nodes`, which ride on their parent stage's fingerprint and
 event) is written by catalog.write_table and read by catalog.read_table —
 catalog.py is the only seam to swap for an Iceberg catalog on a real
-cluster. Mentions/links are written partitioned by an int conv_id hash
-bucket so downstream stages and incremental re-runs prune by bucket.
+cluster. Each stage reads its upstream table whole, so transcripts,
+mentions and links are written unpartitioned, a few files each;
+`snapshot` is partitioned by ontology and `materialize` by pred_group.
 Detect's pattern list and link's decision table come from one
 link_score.Dictionary per run, whose single terms collect runs only if
 one of the two stages does. At the end
@@ -43,10 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
-from .incremental import bucket_of
 from .link_score import Dictionary
 
-CODE_VERSION = "r1.0"  # bump to invalidate all stage caches
+CODE_VERSION = "r1.1"  # bump to invalidate all stage caches
 
 MARKER = "_FINGERPRINT.json"
 
@@ -79,22 +79,18 @@ class PipelineRunner:
         self,
         spark: SparkSession,
         out_dir: str,
-        sf_dir: str | None = None,
         n_convs: int = 500,
         n_terms: int = 200,
         seed: int = 42,
         run_ts: str = "1970-01-01T00:00:00",
-        buckets: int = 32,
         resume: bool = False,
     ) -> None:
         self.spark = spark
         self.out = out_dir
-        self.sf_dir = sf_dir
         self.n_convs = n_convs
         self.n_terms = n_terms
         self.seed = seed
         self.run_ts = run_ts
-        self.buckets = buckets
         self.resume = resume
         self.events: list[dict] = []
         self._metrics: list[dict] = []
@@ -178,20 +174,19 @@ class PipelineRunner:
 
         fp = _fingerprint(
             CODE_VERSION, "transcripts", str(self.n_convs), str(self.seed),
-            str(self.n_terms), self.sf_dir or "synthetic",
+            str(self.n_terms),
         )
 
         def build() -> DataFrame:
             labels = sorted(
                 {r["label"] for r in ontology_terms_rows(self.n_terms, self.seed)}
             )
-            df = build_transcripts(
+            return build_transcripts(
                 self.spark, n_convs=self.n_convs, seed=self.seed,
                 mention_labels=labels,
             )
-            return df.withColumn("bucket", bucket_of("conv_id", self.buckets))
 
-        return self._table("transcripts", fp, build, partition_by=["bucket"])
+        return self._table("transcripts", fp, build)
 
     def mention_detect(self, dictionary: Dictionary, transcripts: DataFrame) -> DataFrame:
         from .mention_detect import detect_mentions
@@ -201,12 +196,10 @@ class PipelineRunner:
             _committed(self._stage_dir("snapshot")) or "",
             _committed(self._stage_dir("transcripts")) or "",
         )
-
-        def build() -> DataFrame:
-            m = detect_mentions(self.spark, transcripts, dictionary.patterns)
-            return m.withColumn("bucket", bucket_of("conv_id", self.buckets))
-
-        return self._table("mention_detect", fp, build, partition_by=["bucket"])
+        return self._table(
+            "mention_detect", fp,
+            lambda: detect_mentions(self.spark, transcripts, dictionary.patterns),
+        )
 
     def link_score(self, dictionary: Dictionary, mentions: DataFrame) -> DataFrame:
         fp = _fingerprint(
@@ -214,12 +207,9 @@ class PipelineRunner:
             _committed(self._stage_dir("snapshot")) or "",
             _committed(self._stage_dir("mention_detect")) or "",
         )
-
-        def build() -> DataFrame:
-            links = dictionary.link(mentions.drop("bucket"), dictionary.idf)
-            return links.withColumn("bucket", bucket_of("conv_id", self.buckets))
-
-        return self._table("link_score", fp, build, partition_by=["bucket"])
+        return self._table(
+            "link_score", fp, lambda: dictionary.link(mentions, dictionary.idf)
+        )
 
     def canonicalize(self, terms: DataFrame, xrefs: DataFrame) -> DataFrame:
         from .canonicalize import canonical_mapping
@@ -243,7 +233,7 @@ class PipelineRunner:
         )
 
         def build() -> DataFrame:
-            triples = extract_triples(links.drop("bucket"), run_ts=self.run_ts)
+            triples = extract_triples(links, run_ts=self.run_ts)
             return triples.withColumn(
                 "pred_group",
                 F.when(

@@ -5,12 +5,14 @@ anywhere), but a transcript KG at 10^12-turn scale is fed by a live firehose;
 the batch operators here are deliberately expressed so the SAME code runs
 under Structured Streaming:
 
-* `detect_mentions` is `mapInPandas` over a broadcast automaton — stateless
-  per-batch, so it is directly streamable (no rewrite);
+* `detect_mentions` is a stateless per-batch map over a broadcast
+  automaton, so it is directly streamable: every stream here detects
+  through `stream_detect_mentions`, which calls it with the event-time
+  column carried (no second scan, no second matcher);
 * windowed rollups use event-time windows + watermark for late turns;
-* sinks: append-mode parquet per micro-batch lands in the same partitioned
-  layout the batch pipeline writes, so downstream stages don't care whether
-  a bucket came from batch or stream.
+* sinks: append-mode parquet per micro-batch lands in the same columns
+  the batch pipeline writes, so downstream stages don't care whether a
+  row came from batch or stream.
 
 Checkpointing is Structured Streaming's own WAL (`checkpointLocation`),
 complementary to the batch runner's stage fingerprints.
@@ -241,57 +243,11 @@ def windowed_mention_counts(
     window: str = "1 minute",
     watermark: str = "2 minutes",
 ) -> DataFrame:
-    """Tumbling event-time window counts per pattern with late-data bound.
-
-    Detection must keep the event-time column for the watermark, so the
-    scan projects (conv_id, turn_idx, ts, text) and the mapInPandas schema
-    is extended with ts — stateless map, then the stateful windowed count
-    runs JVM-side with watermark-based state eviction.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..pipeline.mention_detect import AhoCorasick, TokenNgramMatcher, split_patterns
-
-    bc = spark.sparkContext.broadcast(patterns)
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("ts", T.TimestampType(), False),
-            T.StructField("pattern", T.StringType(), False),
-        ]
-    )
-
-    def scan(batches):
-        matchers = None
-        for pdf in batches:
-            if matchers is None:
-                simple, complex_ = split_patterns(
-                    [p.lower().strip() for p in bc.value if p and p.strip()]
-                )
-                matchers = []
-                if simple:
-                    matchers.append(TokenNgramMatcher(simple))
-                if complex_:
-                    ac = AhoCorasick()
-                    for p in complex_:
-                        ac.add(p)
-                    matchers.append(ac.build())
-            out = []
-            for conv, turn, ts, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["ts"], pdf["text"]
-            ):
-                if not text:
-                    continue
-                for m in matchers:
-                    for _b, _e, pat in m.find(text):
-                        out.append((conv, int(turn), ts, pat))
-            yield pd.DataFrame(out, columns=["conv_id", "turn_idx", "ts", "pattern"])
-
-    mentions = stream.select("conv_id", "turn_idx", "ts", "text").mapInPandas(
-        scan, schema=schema
-    )
+    """Tumbling event-time window counts per pattern with late-data bound:
+    `stream_detect_mentions` (the batch scan, carrying ts), then the
+    stateful windowed count, which runs JVM-side with watermark-based
+    state eviction."""
+    mentions = stream_detect_mentions(spark, stream, patterns)
     return (
         mentions.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"), "pattern")

@@ -148,3 +148,49 @@ def test_manifest_schema_equals_inferred_schema(spark, tmp_path):
         path = f"{out}/{table}"
         assert read_manifest(path) is not None, table
         assert read_table(spark, path).schema == spark.read.parquet(path).schema, table
+
+
+def test_runner_tables_unbucketed_few_files(spark, tmp_path):
+    """Stages read their upstream table whole, so no runner table is laid
+    out by a hash bucket, and the per-conversation tables are a few files
+    each rather than a few per bucket."""
+    import glob
+
+    from ontology_mapper_spark.catalog import read_manifest
+
+    out = str(tmp_path / "kg")
+    PipelineRunner(spark, out, n_convs=20, n_terms=30, resume=False).run()
+    tables = ("snapshot", "snapshot_xrefs", "transcripts", "mention_detect",
+              "link_score", "canonicalize", "materialize", "edges", "nodes")
+    for table in tables:
+        assert read_manifest(f"{out}/{table}")["partition_spec"] != ["bucket"], table
+    cap = spark.sparkContext.defaultParallelism
+    for table in ("transcripts", "mention_detect", "link_score"):
+        files = glob.glob(f"{out}/{table}/**/*.parquet", recursive=True)
+        assert 1 <= len(files) <= cap, (table, len(files))
+
+
+def test_local_components_collect_is_one_job(spark, tmp_path):
+    """connected_components' driver-local path fetches a multi-partition
+    edge table in one Spark job (CollectLimit alone would scan the first
+    partition in a job of its own, then the rest)."""
+    from ontology_mapper_spark.pipeline.canonicalize import connected_components
+
+    path = str(tmp_path / "edges")
+    edges = [(f"n{i}", f"n{i + 1}") for i in range(0, 40, 2)]
+    spark.createDataFrame(edges, "src_iri string, dst_iri string").repartition(
+        4
+    ).write.parquet(path)
+    read = spark.read.parquet(path)
+    assert read.rdd.getNumPartitions() > 1
+    sc = spark.sparkContext
+    sc.setJobGroup("test-local-cc", "local components")
+    try:
+        labels = connected_components(read, local_threshold=1000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(_group_jobs(spark, "test-local-cc")) == 1
+    # each edge is its own component, labelled by its smaller node
+    assert {(r["node"], r["component"]) for r in labels.collect()} == {
+        (n, u) for u, v in edges for n in (u, v)
+    }
